@@ -370,7 +370,7 @@ def read_binlog_dir(spark, path: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    raw = (spark.read.option("wholetext", True).text(path)
+    raw = (spark.read.text(path, wholetext=True)
            .select(F.col("_metadata.file_path").alias("file"),
                    F.col("_metadata.file_modification_time")
                     .alias("file_mtime"),

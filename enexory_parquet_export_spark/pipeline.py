@@ -108,14 +108,12 @@ def incremental_sync(spark: SparkSession, source: DataFrame,
     wholesale (late-data tolerance by partition rewrite, :284-291) plus
     everything after it, in ONE ranged scan; dynamic partition
     overwrite keeps untouched days intact.  Returns the refreshed
-    days."""
+    days, sorted."""
     resume = find_resume_point(spark, mirror_path)
-    fresh = source
     if resume is not None:
-        fresh = source.filter(F.col("date_time") >= F.lit(resume[:10]))
-    out = normalize(fresh).select("day", *MIRROR_COLS)
-    write_day_partitioned(out, mirror_path)
-    return [r["day"] for r in out.select("day").distinct().collect()]
+        source = source.filter(F.col("date_time") >= F.lit(resume[:10]))
+    return write_day_partitioned(normalize(source).select("day", *MIRROR_COLS),
+                                 mirror_path)
 
 
 def repair(spark: SparkSession, mirror_path: str) -> int:
@@ -123,24 +121,25 @@ def repair(spark: SparkSession, mirror_path: str) -> int:
     invalid rows (db_extractor.py:151-193 revalidates every historical
     file; here clean days are never rewritten).  Returns #rows fixed."""
     mirror = read_day_partitioned(spark, mirror_path)
-    flagged = validate(mirror)
-    bad_days = [r["day"] for r in flagged.filter(~F.col("valid"))
-                .select("day").distinct().collect()]
-    if not bad_days:
+    bad = (validate(mirror).filter(~F.col("valid"))
+           .groupBy("day")
+           .agg(F.count("*").alias("n"),
+                F.collect_set(day_key(normalize_datetime(F.col("date_time"))))
+                 .alias("dest"))
+           .collect())
+    if not bad:
         return 0
-    n_bad = flagged.filter(~F.col("valid")).count()
-    fixed = (normalize(mirror.filter(F.col("day").isin(bad_days))
+    # a repaired row can MIGRATE days (garbage date_time → sentinel
+    # day): its destination day is rewritten whole along with it, and a
+    # bad day it emptied is removed (consolidate.cpp:226-238's cleanup)
+    bad_days = [r["day"] for r in bad]
+    days = set(bad_days).union(*(r["dest"] for r in bad))
+    fixed = (normalize(mirror.filter(F.col("day").isin(sorted(days)))
                        .drop("day"))
              .select("day", *MIRROR_COLS))
-    write_day_partitioned(fixed, mirror_path)
-    # a repaired row can MIGRATE days (garbage date_time → sentinel
-    # day); a bad day whose rows all moved out is absent from the
-    # write set, so dynamic overwrite leaves its stale partition —
-    # remove it explicitly (same contract as the merge's emptied-day
-    # cleanup, consolidate.cpp:226-238).
-    surviving = [r["day"] for r in fixed.select("day").distinct().collect()]
-    remove_empty_days(spark, mirror_path, bad_days, surviving)
-    return n_bad
+    remove_empty_days(spark, mirror_path, bad_days,
+                      write_day_partitioned(fixed, mirror_path))
+    return sum(r["n"] for r in bad)
 
 
 @dataclass
@@ -156,21 +155,20 @@ def row_integrity(spark: SparkSession, source: DataFrame,
                   mirror_path: str) -> IntegrityReport:
     """Count reconciliation (row_integrity.py:48-82) generalized to
     per-day localization (SURVEY §3.3): the reference can only say THAT
-    counts differ; per-day diffs say WHERE.  Parquet footer metadata
-    serves both counts — no data scan."""
-    src_days = (normalize(source).groupBy("day")
-                .agg(F.count("*").alias("n_src")))
-    mir_days = (read_day_partitioned(spark, mirror_path).groupBy("day")
-                .agg(F.count("*").alias("n_mir")))
-    per_day = (src_days.join(mir_days, "day", "full_outer")
-               .select("day",
-                       F.coalesce("n_src", F.lit(0)).alias("n_src"),
-                       F.coalesce("n_mir", F.lit(0)).alias("n_mir"))
-               .filter(F.col("n_src") != F.col("n_mir"))
-               .orderBy("day"))
-    mism = [(r["day"], r["n_src"], r["n_mir"]) for r in per_day.collect()]
-    n_src = source.count()
-    n_mir = read_day_partitioned(spark, mirror_path).count()
+    counts differ; per-day diffs say WHERE.  One aggregation over both
+    sides, tagged, gives the per-day counts; totals are their sums.
+    The source is scanned in full, the mirror only for its ``day``."""
+    sides = (normalize(source).select("day", F.lit(True).alias("src"))
+             .unionByName(read_day_partitioned(spark, mirror_path)
+                          .select("day", F.lit(False).alias("src"))))
+    per_day = (sides.groupBy("day")
+               .agg(F.count_if("src").alias("n_src"),
+                    F.count_if(~F.col("src")).alias("n_mir"))
+               .collect())
+    n_src = sum(r["n_src"] for r in per_day)
+    n_mir = sum(r["n_mir"] for r in per_day)
+    mism = sorted((r["day"], r["n_src"], r["n_mir"]) for r in per_day
+                  if r["n_src"] != r["n_mir"])
     return IntegrityReport(n_src, n_mir, n_src == n_mir, n_mir - n_src, mism)
 
 

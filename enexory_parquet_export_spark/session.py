@@ -18,9 +18,12 @@ Determinism notes (SURVEY.md §2.2 rules):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 #: Conf that must hold for correctness; all runtime-settable.
 RUNTIME_CONFS: dict[str, str] = {
@@ -133,8 +136,8 @@ def configure_force(spark: SparkSession) -> SparkSession:
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            pass  # non-settable on this build — best effort
+        except Exception as exc:  # non-settable on this build
+            log.warning("cannot set %s=%s: %s", key, value, exc)
     _CONFIGURED.difference_update(
         {a for a in _CONFIGURED if a != app_id})
     _CONFIGURED.add(app_id)

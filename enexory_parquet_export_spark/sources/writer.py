@@ -12,6 +12,9 @@ the file shape (SURVEY.md §7 risk register):
   (consolidate.cpp:226-238) → ``remove_empty_days`` deletes partitions
   that were touched by a merge but produced zero rows.
 
+``write_day_partitioned`` returns the days it wrote (an observed
+metric of the write itself), so callers never re-read to learn them.
+
 Scale posture: dynamic partition overwrite only rewrites touched
 partitions, so a 100 TB mirror with a 3-day CDC window rewrites 3
 partitions, never the table.  ``remove_empty_days`` is a driver-side
@@ -20,30 +23,35 @@ metadata operation on the partition *list*, never a data scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
 def write_day_partitioned(df: DataFrame, path: str,
                           mode: str = "overwrite",
-                          day_col: str = "day",
-                          file_format: str = "parquet") -> None:
-    """Write partitioned by day with dynamic partition overwrite.
+                          file_format: str = "parquet") -> list[str]:
+    """Write partitioned by ``day`` with dynamic partition overwrite;
+    returns the sorted days written (``[]`` for an empty ``df``).
 
     ``mode="overwrite"`` + partitionOverwriteMode=dynamic rewrites only
     the day-partitions present in ``df`` — the Spark-native equivalent
     of the reference's per-day file overwrite
-    (Parquet Export/db_extractor.py:247-248).
+    (Parquet Export/db_extractor.py:247-248).  The days are observed
+    above the exchange: below it, AQE drops an empty input's write
+    stage and the metric never arrives.
 
     ``file_format`` selects the columnar sink: ``parquet`` (the
     reference's mirror format, snappy by session conf) or ``orc``
     (same partition contract, same pushdown/pruning story).
     """
-    (df.repartition(day_col)  # one shuffle → at most one writer task per day
+    written = Observation()
+    (df.repartition("day")  # one shuffle → at most one writer task per day
+       .observe(written, F.collect_set("day").alias("days"))
        .write.mode(mode)
-       .partitionBy(day_col)
+       .partitionBy("day")
        .format(file_format)
        .save(path))
+    return sorted(written.get["days"])
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -242,8 +250,7 @@ def write_zordered(df: DataFrame, path: str, rank_cols: list[str], *,
          .write.mode(mode).parquet(path))
 
 
-def write_reference_layout(df: DataFrame, path: str, *,
-                           day_col: str = "day") -> list[str]:
+def write_reference_layout(df: DataFrame, path: str) -> list[str]:
     """Export in the REFERENCE'S file layout: one snappy parquet file
     per day named ``YYYY-MM-DD.parquet`` flat under ``path`` — exactly
     what ``db_extractor.py:15,211,247`` writes and what its repair pass
@@ -256,8 +263,8 @@ def write_reference_layout(df: DataFrame, path: str, *,
     the FILENAME only, matching the reference (its per-day files don't
     carry the day as a column).
 
-    Mechanics: one day-partitioned write (one file per day via the
-    partition repartition), then a driver-side FS rename per day —
+    Mechanics: one :func:`write_day_partitioned` (one file per day),
+    then a driver-side FS rename per day —
     bounded by day count, metadata-only, the same class of operation
     as :func:`list_days`.  Idempotent: an existing ``<day>.parquet``
     is replaced atomically-per-day (delete + rename).
@@ -268,11 +275,9 @@ def write_reference_layout(df: DataFrame, path: str, *,
     tmp = path.rstrip("/") + "/_ref_export_tmp"
     fs, jvm, _ = _hadoop_fs(spark, path)
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(path))
-    (df.repartition(day_col)
-       .write.mode("overwrite").partitionBy(day_col).parquet(tmp))
-    written = []
     try:
-        for day in list_days(spark, tmp):
+        days = write_day_partitioned(df, tmp)
+        for day in days:
             part_dir = jvm.org.apache.hadoop.fs.Path(f"{tmp}/day={day}")
             parts = [s.getPath() for s in fs.listStatus(part_dir)
                      if s.getPath().getName().endswith(".parquet")]
@@ -284,10 +289,9 @@ def write_reference_layout(df: DataFrame, path: str, *,
             if fs.exists(dest):
                 fs.delete(dest, False)
             fs.rename(parts[0], dest)
-            written.append(day)
     finally:
         fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-    return sorted(written)
+    return days
 
 
 def read_reference_layout(spark: SparkSession, path: str) -> DataFrame:

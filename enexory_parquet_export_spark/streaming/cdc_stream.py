@@ -71,34 +71,22 @@ def stream_changelog(spark: SparkSession, path: str,
 
 def merge_batch(spark: SparkSession, batch: DataFrame, mirror_path: str) -> None:
     """One micro-batch merge: consolidate the batch, partition-prune the
-    base read to touched days, apply delete→update-if-exists→upsert,
-    rewrite only those partitions, drop emptied ones."""
+    base read to the touched days, apply delete→update-if-exists→upsert,
+    rewrite the days the merge produced, then drop the touched days it
+    left empty.  One collect of the touched days, then the write."""
     changes = consolidate(batch)
     touched = [r["day"] for r in changes.select("day").distinct().collect()]
     if not touched:
         return
-    existing = set(list_days(spark, mirror_path))
-    if existing:
+    if list_days(spark, mirror_path):
         base = (read_day_partitioned(spark, mirror_path)
                 .filter(F.col("day").isin(touched))
                 .select("day", "pk", "date_time", "value", "ts_epoch"))
     else:
         base = spark.createDataFrame(
             [], "day string, pk bigint, date_time string, value double, ts_epoch bigint")
-    # bounded micro-batch-scoped cache with explicit unpersist below —
-    # two consumers (surviving-day probe + partition write) of one
-    # already-materialized batch; never on a declared-query
-    # construction path, so the bench purity counter can't be fooled
-    merged = apply_changes(base, changes).persist()  # lint: allow-persist
-    try:
-        surviving = [r["day"] for r in merged.select("day").distinct().collect()]
-        if surviving:
-            write_day_partitioned(merged, mirror_path)
-        remove_empty_days(spark, mirror_path,
-                          touched_days=[d for d in touched if d in existing or d in surviving],
-                          surviving_days=surviving)
-    finally:
-        merged.unpersist()
+    remove_empty_days(spark, mirror_path, touched,
+                      write_day_partitioned(apply_changes(base, changes), mirror_path))
 
 
 def start_cdc_merge_stream(changelog: DataFrame, mirror_path: str,
@@ -149,10 +137,10 @@ def stream_binlog_text(spark: SparkSession, path: str,
     as ``operators.binlog.read_binlog_dir``); a segment must be
     complete when it lands, which rotation guarantees.
     """
-    reader = spark.readStream.option("wholetext", "true")
+    reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return (reader.text(path)
+    return (reader.text(path, wholetext=True)
             .select(F.col("_metadata.file_path").alias("file"),
                     F.col("_metadata.file_modification_time")
                      .alias("file_mtime"),

@@ -31,6 +31,19 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn, *args)`` → (Spark jobs the call submitted, its
+    result), read from the scheduler's job counter around the call."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def run(fn, *args, **kwargs):
+        before = sched.nextJobId()
+        out = fn(*args, **kwargs)
+        return sched.nextJobId() - before, out
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -266,3 +266,28 @@ def test_cross_segment_last_event_wins(spark):
     rows = cdc.apply_changes(base, cdc.consolidate(log)).collect()
     assert len(rows) == 1
     assert rows[0]["value"] == 2.0 and rows[0]["ts_epoch"] == 200
+
+
+def test_read_binlog_dir_keeps_line_order(spark, tmp_path):
+    """I, D, I on one key inside one segment file ends as I: the text
+    reader must number lines within the file, or the three blocks tie
+    on ``seq`` and consolidation picks one at random."""
+    from enexory_parquet_export_spark.operators.binlog import (
+        assign_global_seq,
+        read_binlog_dir,
+    )
+
+    def block(header, value, epoch):
+        return [header, "SET", "@1=7", "@3='2024-03-01 10:00:00'",
+                f"@4={value}", f"@6={epoch}"]
+
+    seg = tmp_path / "binlogs" / "mysql-bin.000001"
+    seg.parent.mkdir()
+    seg.write_text("\n".join(block(f"INSERT INTO {TABLE_LIT}", 1.0, 100)
+                             + block(f"DELETE FROM {TABLE_LIT}", 1.0, 101)
+                             + block(f"INSERT INTO {TABLE_LIT}", 3.0, 102)))
+    log = assign_global_seq(parse_binlog_text(
+        read_binlog_dir(spark, str(seg.parent))))
+    rows = cdc.consolidate(log).collect()
+    assert [(r["op"], r["value"], r["ts_epoch"]) for r in rows] == \
+        [("I", 3.0, 102)]

@@ -49,12 +49,24 @@ def test_cli_binlog_apply(spark, sf_dir, tmp_path, capsys):
     from enexory_parquet_export_spark.operators.binlog import (
         render_binlog_text,
     )
-    from enexory_parquet_export_spark.operators.cdc import derive_changelog
+    from enexory_parquet_export_spark.operators.cdc import (
+        apply_changes,
+        consolidate,
+        derive_changelog,
+    )
+    from enexory_parquet_export_spark.sources.writer import (
+        read_day_partitioned,
+    )
 
-    log = derive_changelog(load_table(spark, sf_dir, "events").limit(2000))
+    # pk 0 is the parser's no-row-image marker (the reference's flush
+    # guard), so those blocks never reach the mirror
+    log = derive_changelog(load_table(spark, sf_dir, "events").limit(2000)) \
+        .filter(F.col("pk") != 0)
+    log = spark.createDataFrame(log.collect(), log.schema)
     txt_dir = str(tmp_path / "binlogs")
-    # one text file per day-partition of rendered pseudo-SQL
-    (render_binlog_text(log)
+    # one text file of rendered pseudo-SQL, blocks in seq order as in a
+    # real binlog
+    (render_binlog_text(log.orderBy("seq"))
      .select("line")
      .coalesce(1).write.mode("overwrite").text(txt_dir))
 
@@ -63,7 +75,14 @@ def test_cli_binlog_apply(spark, sf_dir, tmp_path, capsys):
                "--mirror", mirror])
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc == 0
-    assert rep["mirror_days"] > 0
+    empty = spark.createDataFrame(
+        [], "day string, pk bigint, date_time string, value double, ts_epoch bigint")
+    cols = ("day", "pk", "date_time", "value", "ts_epoch")
+    want = {tuple(r) for r in
+            apply_changes(empty, consolidate(log)).select(*cols).collect()}
+    got = {tuple(r) for r in
+           read_day_partitioned(spark, mirror).select(*cols).collect()}
+    assert got == want and rep["mirror_days"] == len({r[0] for r in want}) > 0
 
 
 def test_cli_binlog_apply_with_replica_and_export_ref(spark, sf_dir,

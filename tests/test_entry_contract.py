@@ -74,6 +74,34 @@ def test_configure_force_repins_mutated_runtime_conf(spark):
         assert spark.conf.get(key) == pinned
 
 
+def test_configure_force_logs_a_conf_it_cannot_set(caplog):
+    """A conf the session refuses is logged with its key and the error;
+    the other confs are still applied."""
+    from types import SimpleNamespace
+
+    from enexory_parquet_export_spark import session as sess
+
+    refused = next(iter(sess.RUNTIME_CONFS))
+    applied = {}
+
+    def conf_set(key, value):
+        if key == refused:
+            raise RuntimeError("not settable here")
+        applied[key] = value
+
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="fake"),
+                           conf=SimpleNamespace(set=conf_set))
+    before = set(sess._CONFIGURED)
+    try:
+        with caplog.at_level("WARNING", logger=sess.__name__):
+            sess.configure_force(fake)
+    finally:
+        sess._CONFIGURED.clear()
+        sess._CONFIGURED.update(before)
+    assert refused in caplog.text and "not settable here" in caplog.text
+    assert set(applied) == set(sess.RUNTIME_CONFS) - {refused}
+
+
 def test_day_partitioned_roundtrip(spark, tmp_path):
     from enexory_parquet_export_spark.sources.writer import (
         list_days,
@@ -98,6 +126,28 @@ def test_day_partitioned_roundtrip(spark, tmp_path):
     back2 = read_day_partitioned(spark, path)
     assert back2.count() == 2
     assert back2.filter(F.col("day") == "2024-01-01").collect()[0]["value"] == 9.0
+
+
+def test_day_partitioned_write_returns_days_written(spark, tmp_path):
+    """The writer reports the sorted days it wrote; an empty input over
+    an existing mirror writes nothing, returns [] and leaves it as it
+    was."""
+    from enexory_parquet_export_spark.sources.writer import (
+        list_days,
+        read_day_partitioned,
+        write_day_partitioned,
+    )
+
+    df = spark.createDataFrame(
+        [("2024-01-03", 3, 1.0), ("2024-01-01", 1, 2.0), ("2024-01-03", 4, 3.0)],
+        "day string, pk bigint, value double")
+    path = str(tmp_path / "mirror")
+    assert write_day_partitioned(df, path) == ["2024-01-01", "2024-01-03"]
+    before = sorted(map(tuple, read_day_partitioned(spark, path).collect()))
+
+    assert write_day_partitioned(df.filter(F.col("pk") < 0), path) == []
+    assert list_days(spark, path) == ["2024-01-01", "2024-01-03"]
+    assert sorted(map(tuple, read_day_partitioned(spark, path).collect())) == before
 
 
 def test_day_partitioned_orc_roundtrip(spark, tmp_path):

@@ -82,6 +82,59 @@ class TestPipeline:
         assert out.count() == 2
 
 
+    def test_repair_moves_rows_into_sentinel_day_and_drops_emptied_day(
+            self, spark, tmp_path):
+        """A bad day whose only row moves to the sentinel day is deleted;
+        the sentinel day keeps the rows it already had."""
+        from enexory_parquet_export_spark.sources.writer import write_day_partitioned
+        mirror = str(tmp_path / "m5")
+        rows = [("0001-01-01", 1, SENTINEL_DT, 1.0, "2010-01-05 02:00:00"),
+                ("2010-01-05", 2, "2010-01-05 01:00:00", 2.0, "2010-01-05 02:00:00"),
+                ("2010-01-07", 3, "garbage", 3.0, "2010-01-07 04:00:00")]
+        write_day_partitioned(spark.createDataFrame(
+            rows, "day string, id bigint, date_time string, value double, ts string"),
+            mirror)
+        assert P.repair(spark, mirror) == 1
+        assert list_days(spark, mirror) == ["0001-01-01", "2010-01-05"]
+        sentinel = read_day_partitioned(spark, mirror) \
+            .filter(F.col("day") == "0001-01-01")
+        assert sorted(r["id"] for r in sentinel.collect()) == [1, 3]
+
+    def test_row_integrity_reports_one_sided_days(self, spark, tmp_path):
+        """Days only in the source and days only in the mirror are both
+        reported, sorted by day, and the totals count every row."""
+        from enexory_parquet_export_spark.sources.writer import write_day_partitioned
+        mirror = str(tmp_path / "m6")
+        write_day_partitioned(spark.createDataFrame(
+            [("2010-01-05", 1, "2010-01-05 01:00:00", 1.0, "2010-01-05 02:00:00"),
+             ("2010-01-05", 2, "2010-01-05 02:00:00", 2.0, "2010-01-05 03:00:00"),
+             ("2010-01-02", 9, "2010-01-02 01:00:00", 9.0, "2010-01-02 02:00:00")],
+            "day string, id bigint, date_time string, value double, ts string"),
+            mirror)
+        source = src(spark, [
+            (1, "2010-01-05 01:00:00", 1.0, "2010-01-05 02:00:00"),
+            (2, "2010-01-05 02:00:00", 2.0, "2010-01-05 03:00:00"),
+            (3, "2010-01-08 01:00:00", 3.0, "2010-01-08 02:00:00"),
+            (4, "not a datetime", 4.0, "2010-01-08 03:00:00")])
+        rep = P.row_integrity(spark, source, mirror)
+        assert (rep.source_rows, rep.mirror_rows, rep.matches, rep.difference) == \
+            (4, 3, False, -1)
+        assert rep.per_day_mismatches == [("0001-01-01", 1, 0),
+                                          ("2010-01-02", 0, 1),
+                                          ("2010-01-08", 1, 0)]
+
+    def test_run_sync_job_ceiling(self, spark, tmp_path, count_jobs):
+        """An incremental sync plus audit on a small mirror (fewer than
+        32 days, so partition discovery runs on the driver) stays within
+        its job budget: one resume-point probe, the write, one audit
+        aggregation.  A re-read of the source or the mirror adds jobs."""
+        mirror = str(tmp_path / "m7")
+        P.run_sync(spark, src(spark, ROWS_V1), mirror)
+        rows = ROWS_V1 + [(5, "2010-01-07 01:00:00", 5.0, "2010-01-07 02:00:00")]
+        jobs, rep = count_jobs(P.run_sync, spark, src(spark, rows), mirror)
+        assert rep.matches
+        assert jobs <= 8, jobs
+
 class TestMultimodal:
     def test_extract_features_deterministic(self, spark, sf_dir):
         docs = load_table(spark, sf_dir, "documents").limit(20)

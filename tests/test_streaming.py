@@ -126,6 +126,36 @@ def test_stream_merge_deletes_emptied_day(spark, tmp_path):
     assert list_days(spark, mirror) == []
 
 
+def test_merge_batch_job_ceiling(spark, tmp_path, count_jobs):
+    """One merge into a small mirror (fewer than 32 days, so partition
+    discovery runs on the driver) stays within its job budget: the
+    touched-day collect, then the merge and its write.  Reading the
+    merge back to learn its days adds jobs."""
+    from enexory_parquet_export_spark.sources.writer import (
+        list_days,
+        write_day_partitioned,
+    )
+    from enexory_parquet_export_spark.streaming.cdc_stream import merge_batch
+
+    base = spark.createDataFrame(
+        [(f"2024-01-{d:02d}", pk, f"2024-01-{d:02d} 00:00:00", 1.0, 99)
+         for d in range(1, 11) for pk in range(3)],
+        "day string, pk bigint, date_time string, value double, ts_epoch bigint")
+    mirror = str(tmp_path / "mirror")
+    write_day_partitioned(base, mirror)
+    batch = spark.createDataFrame(
+        [(1, 0, "D", "2024-01-02 00:00:05", None, 105, "2024-01-02"),
+         (2, 1, "U", "2024-01-04 00:00:05", 7.0, 106, "2024-01-04"),
+         (3, 9, "I", "2024-01-25 00:00:05", 8.0, 107, "2024-01-25")]
+        + [(4 + pk, pk, "D", "2024-01-06 00:00:05", None, 108, "2024-01-06")
+           for pk in range(3)],
+        CHANGELOG_SCHEMA)
+    jobs, _ = count_jobs(merge_batch, spark, batch, mirror)
+    assert "2024-01-06" not in list_days(spark, mirror)
+    assert "2024-01-25" in list_days(spark, mirror)
+    assert jobs <= 7, jobs
+
+
 POLLS = [
     # node, seq, online, lag, err
     ("a", 1, True, 0.0, None),
