@@ -52,9 +52,10 @@ def build_parser() -> argparse.ArgumentParser:
     _add_source_args(p)
     p.add_argument("--mirror", required=True)
     p.add_argument("--min-date", default="2010-01-02")
-    p.add_argument("--replica", help="second mirror target (O27): day "
-                                     "partitions are byte-copied after "
-                                     "the sync, rsync-style")
+    p.add_argument("--replica", help="second mirror target (O27): the "
+                                     "day partitions that differ from "
+                                     "the replica's are byte-copied "
+                                     "after the sync, rsync-style")
 
     p = sub.add_parser("backfill", help="one-time historical backfill")
     _add_source_args(p)
@@ -74,8 +75,10 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--binlog-text", required=True,
                    help="text files of mysqlbinlog pseudo-SQL")
     p.add_argument("--mirror", required=True)
-    p.add_argument("--replica", help="second mirror target (O27), "
-                                     "byte-copied after the merge")
+    p.add_argument("--replica", help="second mirror target (O27): the "
+                                     "day partitions that differ from "
+                                     "the replica's are byte-copied "
+                                     "after the merge")
 
     p = sub.add_parser("export-ref",
                        help="export the mirror in the reference's file "

@@ -82,24 +82,14 @@ def historical_backfill(source: DataFrame, mirror_path: str,
 
 
 def find_resume_point(spark: SparkSession, mirror_path: str) -> str | None:
-    """Latest real timestamp in the mirror (O5, db_extractor.py:51-76):
-    max(date_time) excluding the sentinel.  The reference scans files
-    newest-first and stops at the first hit; the distributed analog
-    prunes to the newest day-partition and reads one column of it."""
-    days = list_days(spark, mirror_path)
-    if not days:
-        return None
-    # partition-pruned: only the lexicographically-max day is read,
-    # and only its date_time column; sentinel rows (always in day
-    # 0001-01-01) can't appear here unless the mirror ONLY has them.
-    for day in sorted(days, reverse=True):
-        row = (read_day_partitioned(spark, mirror_path)
-               .filter(F.col("day") == day)
-               .filter(F.col("date_time") != SENTINEL_DT)
-               .agg(F.max("date_time").alias("m")).collect()[0])
-        if row["m"] is not None:
-            return row["m"]
-    return None
+    """Day the sync resumes from (O5, db_extractor.py:51-76): the newest
+    day partition that is not the sentinel day, or ``None``.  The
+    reference opens the newest day file; here the partition listing
+    alone answers, with no Spark job: every row of ``day=D`` has a
+    ``date_time`` starting with ``D`` (``day_key``), and the writer
+    leaves no empty day directory behind."""
+    days = [d for d in list_days(spark, mirror_path) if d != SENTINEL_DT[:10]]
+    return days[-1] if days else None
 
 
 def incremental_sync(spark: SparkSession, source: DataFrame,
@@ -111,7 +101,7 @@ def incremental_sync(spark: SparkSession, source: DataFrame,
     days, sorted."""
     resume = find_resume_point(spark, mirror_path)
     if resume is not None:
-        source = source.filter(F.col("date_time") >= F.lit(resume[:10]))
+        source = source.filter(F.col("date_time") >= F.lit(resume))
     return write_day_partitioned(normalize(source).select("day", *MIRROR_COLS),
                                  mirror_path)
 

@@ -13,7 +13,11 @@ the file shape (SURVEY.md §7 risk register):
   that were touched by a merge but produced zero rows.
 
 ``write_day_partitioned`` returns the days it wrote (an observed
-metric of the write itself), so callers never re-read to learn them.
+metric of the write itself), so callers never re-read to learn them;
+``list_days`` answers "which days exist" from the directory names on
+the driver; ``read_day_partitioned(…, days=…)`` opens only the day
+directories a caller needs, so a read of a few days does not list the
+whole mirror.
 
 Scale posture: dynamic partition overwrite only rewrites touched
 partitions, so a 100 TB mirror with a 3-day CDC window rewrites 3
@@ -96,11 +100,28 @@ def remove_empty_days(spark: SparkSession, path: str,
 
 
 def read_day_partitioned(spark: SparkSession, path: str,
-                         file_format: str = "parquet") -> DataFrame:
+                         file_format: str = "parquet", *,
+                         days: list[str] | None = None) -> DataFrame:
     """Read the mirror back; ``day`` comes from the directory layout,
-    so day-filters become partition pruning (no data scan)."""
-    return (spark.read.format(file_format).load(path)
-                 .withColumn("day", F.col("day").cast("string")))
+    so day-filters become partition pruning (no data scan).
+
+    ``days=None`` reads the whole mirror, and Spark lists every day
+    directory to find its files: past 32 of them
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``) that
+    listing is a Spark job of its own.  ``days`` reads only those
+    ``day=D`` directories (one ``load`` of their paths, ``basePath``
+    keeping ``day`` a column), listed on the driver while there are at
+    most 32.  The schema is still inferred from the files, and ``day``
+    is cast back to the string it is everywhere else (inferred, it is
+    a ``date``).
+    """
+    reader = spark.read.format(file_format)
+    if days is None:
+        df = reader.load(path)
+    else:
+        df = (reader.option("basePath", path)
+              .load([f"{path}/day={d}" for d in days]))
+    return df.withColumn("day", F.col("day").cast("string"))
 
 
 def write_clustered(df: DataFrame, path: str, cluster_cols: list[str], *,
@@ -130,23 +151,28 @@ def write_clustered(df: DataFrame, path: str, cluster_cols: list[str], *,
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
-def day_file_stats(spark: SparkSession, path: str) -> dict[str, tuple[int, int]]:
-    """``{day: (n_files, total_bytes)}`` — pure file-listing metadata."""
+def day_files(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
+    """``{day: {file_name: length}}`` of each day's data files — pure
+    file-listing metadata, on the driver."""
     fs, jvm, jpath = _hadoop_fs(spark, path)
-    out: dict[str, tuple[int, int]] = {}
+    out: dict[str, dict[str, int]] = {}
     if not fs.exists(jpath):
         return out
     for status in fs.listStatus(jpath):
         name = status.getPath().getName()
         if not (status.isDirectory() and name.startswith("day=")):
             continue
-        n, total = 0, 0
-        for f in fs.listStatus(status.getPath()):
-            if f.isFile() and not f.getPath().getName().startswith(("_", ".")):
-                n += 1
-                total += f.getLen()
-        out[name[len("day="):]] = (n, total)
+        out[name[len("day="):]] = {
+            f.getPath().getName(): f.getLen()
+            for f in fs.listStatus(status.getPath())
+            if f.isFile() and not f.getPath().getName().startswith(("_", "."))}
     return out
+
+
+def day_file_stats(spark: SparkSession, path: str) -> dict[str, tuple[int, int]]:
+    """``{day: (n_files, total_bytes)}`` — pure file-listing metadata."""
+    return {day: (len(files), sum(files.values()))
+            for day, files in day_files(spark, path).items()}
 
 
 def compact_days(spark: SparkSession, path: str, *,
@@ -305,8 +331,8 @@ def read_reference_layout(spark: SparkSession, path: str) -> DataFrame:
                 r"(\d{4}-\d{2}-\d{2})\.parquet$", 1)))
 
 
-def mirror_to_replica(spark: SparkSession, primary: str, replica: str, *,
-                      days: list[str] | None = None) -> list[str]:
+def mirror_to_replica(spark: SparkSession, primary: str,
+                      replica: str) -> list[str]:
     """Second-target mirror sink (O27): copy day-partitions
     byte-for-byte from the primary mirror to a replica path.
 
@@ -316,28 +342,30 @@ def mirror_to_replica(spark: SparkSession, primary: str, replica: str, *,
     is a verbatim clone (hash-identical files), not a re-encode, and
     re-running the copy for a day is idempotent (delete + copy).
 
-    ``days=None`` copies every partition; pass the touched-day list
-    after a merge for the reference's incremental behavior.  Driver-side
-    FS operation bounded by day count — the data bytes move through the
-    filesystem layer, never through Spark.
+    Like rsync's quick check, a day is copied only when the replica
+    lacks it or lists other files (names and lengths) than the primary;
+    Spark names each written file after its write job, so a rewritten
+    day never lists like its old copy.  The choice is made from the two
+    listings alone, so whichever commands rewrote the primary since the
+    last copy (``repair``, ``backfill``, a run without ``--replica``, a
+    copy cut short), the replica ends equal to it.  Days the primary no
+    longer has are deleted from the replica.  Driver-side FS operation
+    bounded by day count — the data bytes move through the filesystem
+    layer, never through Spark.  Returns the days copied, sorted.
     """
     fs, jvm, _ = _hadoop_fs(spark, primary)
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(replica))
-    copied = []
-    for day in (days if days is not None else list_days(spark, primary)):
-        src = jvm.org.apache.hadoop.fs.Path(f"{primary}/day={day}")
-        if not fs.exists(src):
-            continue
-        dst = jvm.org.apache.hadoop.fs.Path(f"{replica}/day={day}")
+    Path = jvm.org.apache.hadoop.fs.Path
+    want, have = day_files(spark, primary), day_files(spark, replica)
+    fs.mkdirs(Path(replica))
+    copied = sorted(d for d, files in want.items() if have.get(d) != files)
+    for day in copied:
+        dst = Path(f"{replica}/day={day}")
         if fs.exists(dst):
             fs.delete(dst, True)
-        jvm.org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst,
-                                               False, True, hconf)
-        copied.append(day)
+        jvm.org.apache.hadoop.fs.FileUtil.copy(
+            fs, Path(f"{primary}/day={day}"), fs, dst, False, True, hconf)
     # a day deleted on the primary disappears from the replica too
-    for day in list_days(spark, replica):
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{primary}/day={day}")):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{replica}/day={day}"),
-                      True)
-    return sorted(copied)
+    for day in sorted(set(have) - set(want)):
+        fs.delete(Path(f"{replica}/day={day}"), True)
+    return copied

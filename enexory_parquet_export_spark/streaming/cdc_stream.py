@@ -19,9 +19,9 @@ variant for aggregations that DO need bounded state.
 
 Scale posture: each micro-batch shuffles only its consolidated
 changelog (small) against the touched day-partitions of the base
-(partition-pruned read); state never accumulates in the stream — the
-mirror on disk IS the state, the same copy-on-write philosophy as the
-reference.
+(read from their directories only, so the mirror is never listed
+whole); state never accumulates in the stream — the mirror on disk IS
+the state, the same copy-on-write philosophy as the reference.
 """
 
 from __future__ import annotations
@@ -69,17 +69,28 @@ def stream_changelog(spark: SparkSession, path: str,
     return reader.load(path)
 
 
-def merge_batch(spark: SparkSession, batch: DataFrame, mirror_path: str) -> None:
-    """One micro-batch merge: consolidate the batch, partition-prune the
-    base read to the touched days, apply delete→update-if-exists→upsert,
-    rewrite the days the merge produced, then drop the touched days it
-    left empty.  One collect of the touched days, then the write."""
+def merge_batch(spark: SparkSession, batch: DataFrame, mirror_path: str) -> list[str]:
+    """One micro-batch merge: consolidate the batch, read the base from
+    the touched days' directories only, apply
+    delete→update-if-exists→upsert, rewrite the days the merge produced,
+    then drop the touched days it left empty.  One collect of the
+    touched days, then the write.  Returns the touched days, sorted:
+    every day the merge rewrote or removed.
+
+    The base read infers its schema from the mirror's files, so a
+    mirror in another schema (``sync`` writes ``id``/``ts``) fails the
+    ``select`` below before anything is written.  When no touched day
+    exists yet, one existing day is opened for that check alone: the
+    ``day`` filter prunes all of its files."""
     changes = consolidate(batch)
-    touched = [r["day"] for r in changes.select("day").distinct().collect()]
+    touched = sorted(r["day"] for r in changes.select("day").distinct().collect())
     if not touched:
-        return
-    if list_days(spark, mirror_path):
-        base = (read_day_partitioned(spark, mirror_path)
+        return []
+    existing = list_days(spark, mirror_path)
+    if existing:
+        present = sorted(set(touched) & set(existing))
+        base = (read_day_partitioned(spark, mirror_path,
+                                     days=present or existing[:1])
                 .filter(F.col("day").isin(touched))
                 .select("day", "pk", "date_time", "value", "ts_epoch"))
     else:
@@ -87,6 +98,7 @@ def merge_batch(spark: SparkSession, batch: DataFrame, mirror_path: str) -> None
             [], "day string, pk bigint, date_time string, value double, ts_epoch bigint")
     remove_empty_days(spark, mirror_path, touched,
                       write_day_partitioned(apply_changes(base, changes), mirror_path))
+    return touched
 
 
 def start_cdc_merge_stream(changelog: DataFrame, mirror_path: str,

@@ -33,14 +33,21 @@ def spark():
 
 @pytest.fixture
 def count_jobs(spark):
-    """``count_jobs(fn, *args)`` → (Spark jobs the call submitted, its
-    result), read from the scheduler's job counter around the call."""
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    """``count_jobs(fn, *args)`` → (the Spark jobs the call submitted,
+    its result), read from the scheduler's job counter around the call.
+    Each job is listed by its name, the call site that submitted it, so
+    a ceiling assert that prints the list names what ran."""
+    sc = spark.sparkContext._jsc.sc()
+    sched = sc.dagScheduler()
 
     def run(fn, *args, **kwargs):
         before = sched.nextJobId()
         out = fn(*args, **kwargs)
-        return sched.nextJobId() - before, out
+        end = sched.nextJobId()
+        sc.listenerBus().waitUntilEmpty()
+        store = sc.statusStore()
+        return [f"{jid}: {store.job(jid).name()}"
+                for jid in range(before, end)], out
     return run
 
 

@@ -95,7 +95,7 @@ def test_range_cluster_path_value_identical_and_exchange_free_sort(spark):
     # final orderBy would plan a SECOND rangepartitioning exchange
     # (the probes fixture's own distinct adds a hash exchange, which
     # is probe construction, not the asof shape).
-    assert plan.count("rangepartitioning") == 1, plan
+    assert plan.count("Exchange rangepartitioning") == 1, plan
 
 
 # ---------------------------------------------------------------------------

@@ -297,6 +297,36 @@ def test_mirror_to_replica_byte_identical(spark, tmp_path):
     assert (tmp_path / "r" / "day=2024-01-01").exists()
 
 
+def test_mirror_to_replica_copies_only_days_that_differ(spark, tmp_path):
+    """A day is copied when the replica lacks it or lists other files
+    than the primary: an unchanged mirror copies nothing, a rewritten
+    day is copied, and a replica day missing a file (a copy cut short)
+    is copied again."""
+    from enexory_parquet_export_spark.sources.writer import (
+        day_files,
+        mirror_to_replica,
+        write_day_partitioned,
+    )
+
+    def day_df(*days):
+        return spark.createDataFrame([(d, 1, 9.0) for d in days],
+                                     "day string, pk bigint, value double")
+
+    primary, replica = str(tmp_path / "p"), str(tmp_path / "r")
+    days = ["2024-01-01", "2024-01-02", "2024-01-03"]
+    write_day_partitioned(day_df(*days), primary)
+    assert mirror_to_replica(spark, primary, replica) == days
+    assert mirror_to_replica(spark, primary, replica) == []
+
+    write_day_partitioned(day_df("2024-01-02"), primary)   # same rows, new file
+    assert mirror_to_replica(spark, primary, replica) == ["2024-01-02"]
+
+    for f in (tmp_path / "r" / "day=2024-01-03").glob("*.parquet"):
+        f.unlink()
+    assert mirror_to_replica(spark, primary, replica) == ["2024-01-03"]
+    assert day_files(spark, primary) == day_files(spark, replica)
+
+
 def test_declared_query_code_never_persists_directly():
     """bench.py's steady-run purity detection observes
     session.materialize and construction-scoped jobs (and, since r6, a

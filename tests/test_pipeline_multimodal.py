@@ -57,9 +57,38 @@ class TestPipeline:
         assert before == after
 
     def test_resume_point_skips_sentinel(self, spark, tmp_path):
+        """The resume point is the newest day, read from the listing;
+        the sentinel day holds no real date and never counts."""
         mirror = str(tmp_path / "m3")
         P.run_sync(spark, src(spark, ROWS_V1), mirror)
-        assert P.find_resume_point(spark, mirror) == "2010-01-06 03:00:00"
+        assert P.find_resume_point(spark, mirror) == "2010-01-06"
+
+    def test_resume_point_of_sentinel_only_mirror_is_none(self, spark, tmp_path):
+        mirror = str(tmp_path / "m3s")
+        P.run_sync(spark, src(spark, [ROWS_V1[3]]), mirror)
+        assert list_days(spark, mirror) == [SENTINEL_DT[:10]]
+        assert P.find_resume_point(spark, mirror) is None
+
+    def test_sync_resumes_past_garbage_in_newest_day(self, spark, tmp_path):
+        """A stray file in the newest day holding a garbage ``date_time``
+        ("garbage" sorts above every digit) does not move the resume
+        point: the next night is still loaded, and the newest day is
+        rewritten from the source, which drops the stray row."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        mirror = str(tmp_path / "m3g")
+        P.run_sync(spark, src(spark, ROWS_V1), mirror)
+        pq.write_table(pa.table({"id": pa.array([99], pa.int64()),
+                                 "date_time": ["garbage"],
+                                 "value": pa.array([9.0], pa.float64()),
+                                 "ts": ["2010-01-06 09:00:00"]}),
+                       str(tmp_path / "m3g" / "day=2010-01-06" / "stray.parquet"))
+        rows = ROWS_V1 + [(5, "2010-01-07 01:00:00", 5.0, "2010-01-07 02:00:00")]
+        rep = P.run_sync(spark, src(spark, rows), mirror)
+        # the totals alone would match: the stray row stands in for the
+        # night that was not loaded
+        assert rep.matches and not rep.per_day_mismatches, rep
+        assert not (tmp_path / "m3g" / "day=2010-01-06" / "stray.parquet").exists()
 
     def test_validate_flags(self, spark):
         flagged = P.validate(src(spark, ROWS_V1))
@@ -126,14 +155,33 @@ class TestPipeline:
     def test_run_sync_job_ceiling(self, spark, tmp_path, count_jobs):
         """An incremental sync plus audit on a small mirror (fewer than
         32 days, so partition discovery runs on the driver) stays within
-        its job budget: one resume-point probe, the write, one audit
-        aggregation.  A re-read of the source or the mirror adds jobs."""
+        its job budget: the write, then the audit's schema inference and
+        aggregation.  The resume point comes from the listing; a read of
+        the mirror to find it, or a re-read of the source, adds jobs."""
         mirror = str(tmp_path / "m7")
         P.run_sync(spark, src(spark, ROWS_V1), mirror)
         rows = ROWS_V1 + [(5, "2010-01-07 01:00:00", 5.0, "2010-01-07 02:00:00")]
         jobs, rep = count_jobs(P.run_sync, spark, src(spark, rows), mirror)
         assert rep.matches
-        assert jobs <= 8, jobs
+        assert len(jobs) <= 5, jobs
+
+    def test_run_sync_job_ceiling_above_listing_threshold(
+            self, spark, tmp_path, count_jobs):
+        """On a 40-day mirror a whole-mirror read lists its day
+        directories in a Spark job of its own.  The budget grows by that
+        one job, paid by the audit, which must see every day; the
+        resume point still takes none."""
+        mirror = str(tmp_path / "m8")
+        rows = ROWS_V1 + [(10 + d, f"2010-02-{d:02d} 01:00:00", 1.0,
+                           f"2010-02-{d:02d} 02:00:00") for d in range(1, 29)] \
+            + [(40 + d, f"2010-03-{d:02d} 01:00:00", 1.0,
+                f"2010-03-{d:02d} 02:00:00") for d in range(1, 9)]
+        P.run_sync(spark, src(spark, rows), mirror)
+        assert len(list_days(spark, mirror)) == 40
+        rows.append((99, "2010-03-09 01:00:00", 5.0, "2010-03-09 02:00:00"))
+        jobs, rep = count_jobs(P.run_sync, spark, src(spark, rows), mirror)
+        assert rep.matches and not rep.per_day_mismatches, rep
+        assert len(jobs) <= 6, jobs
 
 class TestMultimodal:
     def test_extract_features_deterministic(self, spark, sf_dir):

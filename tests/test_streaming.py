@@ -126,34 +126,85 @@ def test_stream_merge_deletes_emptied_day(spark, tmp_path):
     assert list_days(spark, mirror) == []
 
 
-def test_merge_batch_job_ceiling(spark, tmp_path, count_jobs):
-    """One merge into a small mirror (fewer than 32 days, so partition
-    discovery runs on the driver) stays within its job budget: the
-    touched-day collect, then the merge and its write.  Reading the
-    merge back to learn its days adds jobs."""
+def _merge_jobs(spark, tmp_path, count_jobs, n_days):
+    """Jobs and result of one merge into a mirror of ``n_days`` days
+    (three keys each): a delete, an update, an insert into a new day,
+    and the deletes that empty one day."""
     from enexory_parquet_export_spark.sources.writer import (
         list_days,
         write_day_partitioned,
     )
     from enexory_parquet_export_spark.streaming.cdc_stream import merge_batch
 
-    base = spark.createDataFrame(
-        [(f"2024-01-{d:02d}", pk, f"2024-01-{d:02d} 00:00:00", 1.0, 99)
-         for d in range(1, 11) for pk in range(3)],
-        "day string, pk bigint, date_time string, value double, ts_epoch bigint")
+    days = [f"2024-{1 + d // 28:02d}-{1 + d % 28:02d}" for d in range(n_days)]
     mirror = str(tmp_path / "mirror")
-    write_day_partitioned(base, mirror)
+    write_day_partitioned(spark.createDataFrame(
+        [(day, pk, f"{day} 00:00:00", 1.0, 99) for day in days for pk in range(3)],
+        "day string, pk bigint, date_time string, value double, ts_epoch bigint"),
+        mirror)
     batch = spark.createDataFrame(
         [(1, 0, "D", "2024-01-02 00:00:05", None, 105, "2024-01-02"),
          (2, 1, "U", "2024-01-04 00:00:05", 7.0, 106, "2024-01-04"),
-         (3, 9, "I", "2024-01-25 00:00:05", 8.0, 107, "2024-01-25")]
+         (3, 9, "I", "2024-03-25 00:00:05", 8.0, 107, "2024-03-25")]
         + [(4 + pk, pk, "D", "2024-01-06 00:00:05", None, 108, "2024-01-06")
            for pk in range(3)],
         CHANGELOG_SCHEMA)
-    jobs, _ = count_jobs(merge_batch, spark, batch, mirror)
-    assert "2024-01-06" not in list_days(spark, mirror)
-    assert "2024-01-25" in list_days(spark, mirror)
-    assert jobs <= 7, jobs
+    jobs, touched = count_jobs(merge_batch, spark, batch, mirror)
+    after = list_days(spark, mirror)
+    assert "2024-01-06" not in after and "2024-03-25" in after
+    assert len(after) == n_days
+    return jobs, touched
+
+
+def test_merge_batch_job_ceiling(spark, tmp_path, count_jobs):
+    """One merge into a small mirror (fewer than 32 days, so partition
+    discovery runs on the driver) stays within its job budget: the
+    touched-day collect, the base read's schema inference, then the
+    merge and its write.  Reading the merge back to learn its days adds
+    jobs."""
+    jobs, touched = _merge_jobs(spark, tmp_path, count_jobs, 10)
+    assert len(jobs) <= 7, jobs
+    assert touched == ["2024-01-02", "2024-01-04", "2024-01-06", "2024-03-25"]
+
+
+def test_merge_batch_job_ceiling_above_listing_threshold(spark, tmp_path,
+                                                          count_jobs):
+    """The same budget on a 40-day mirror, where a whole-mirror read
+    lists its day directories in a Spark job of its own: the base is
+    read from the touched days' directories only."""
+    jobs, _ = _merge_jobs(spark, tmp_path, count_jobs, 40)
+    assert len(jobs) <= 7, jobs
+
+
+@pytest.mark.parametrize("day", ["2010-01-05", "2010-01-09"],
+                         ids=["touches-existing-day", "touches-new-day-only"])
+def test_merge_batch_fails_on_sync_written_mirror(spark, tmp_path, day):
+    """A mirror ``sync`` wrote has ``id``/``ts``, not ``pk``/``ts_epoch``.
+    The merge fails analysis before it writes anything, whether or not
+    the batch touches a day the mirror has: no NULL ``pk`` rows, no
+    day of another schema next to the mirror's own."""
+    from pyspark.errors import AnalysisException
+
+    from enexory_parquet_export_spark.pipeline import run_sync
+    from enexory_parquet_export_spark.streaming.cdc_stream import merge_batch
+
+    mirror = tmp_path / "mirror"
+    run_sync(spark, spark.createDataFrame(
+        [(1, "2010-01-05 01:00:00", 1.0, "2010-01-05 02:00:00"),
+         (2, "2010-01-06 01:00:00", 2.0, "2010-01-06 02:00:00")],
+        "id bigint, date_time string, value double, ts string"), str(mirror))
+
+    def files():
+        return {str(f.relative_to(mirror)): f.read_bytes()
+                for f in mirror.rglob("*") if f.is_file()}
+
+    before = files()
+    batch = spark.createDataFrame(
+        [(1, 1, "U", f"{day} 01:00:00", 7.0, 106, day)],
+        CHANGELOG_SCHEMA)
+    with pytest.raises(AnalysisException):
+        merge_batch(spark, batch, str(mirror))
+    assert files() == before
 
 
 POLLS = [
