@@ -28,139 +28,47 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver's correctness check verifies the FIRST 50 entries of
 # ``queries()`` in iteration order.  The window ROTATES each round so
-# every oracle-paired query earns at least one driver-green
-# CORRECTNESS row (the q21 lesson: the local gate can pass while the
-# driver hash fails).  Queries outside the window are still verified
-# every round by the local gate (tools/check_oracle.py), which
-# replicates the driver compare including the typed-divergence check.
-#
-# Rotation ledger (driver-green rounds per band):
-#   r1–r3: q01–q29 + x30–x44, x45, x55, x56, x59, x66, x72  (core)
-#   r4: q11–q29 core + the 21 never-checked x57, x58, x60, x62–x65,
-#        x67–x71, x73, x75–x82 plus the new x83–x92 — ALL went green
-#        (CORRECTNESS_r04 50/50).
-#   r5: q01–q10 + x30–x52/x54 (x46–x52/x54 first-ever slots, r4
-#        advice) + x55/x56/x59/x66/x72 + new x93–x96, tail q11–q17 —
-#        ALL green (CORRECTNESS_r05 50/50).
-#        x53/x74 are rows-only sketches and never occupy a slot.
-#   r6: the r4 band returned after one round out — q11–q29 plus
-#        x57/x58/x60/x62–x65/x67–x71/x73/x75–x92 (31 x-queries;
-#        x59/x66/x72 sat r5 slots, x74 rows-only).  ALL green
-#        (CORRECTNESS_r06 50/50).  x97/x98 were NEW in r6 and
-#        local-gate-only that round.
-#   r7 (this round): per the r6 ledger plan — q01–q10 + x30–x52 +
-#        x54/x55/x56 (the r5 band, one round out) + x59/x66/x72
-#        (green r5, must not go >2 rounds) + x93–x98 (x97 joins the
-#        rotation for its FIRST driver row, post the r7 kernel
-#        rework; x98 likewise) + x99–x103 (NEW in r7 — first
-#        driver rows in their birth round; no tail fill needed).
-#        Exactly 50 slots.  The r6 band (q16–q29 + x57–x92 remainder) sits
-#        out after its green round.
-#   r8: the r6 band returned after one round out — q16–q29 (14) +
-#        x57/x58/x60/x62–x65/x67–x71/x73/x75–x92 (31) — plus
-#        x104–x108 (5, born r7 after the window filled; first driver
-#        rows, the x97/x98 precedent).  ALL green (CORRECTNESS_r08
-#        50/50).  The r7 band sat out after its green round.
-#   r9: the verdict's stated band (q01–q15 + x30–x56
-#        remainder + x93–x103) is 55 names for 50 slots, so five
-#        carry over: q11–q15 are MANDATORY (last green r6 — already
-#        two rounds out), and x45–x49 (stable since r5, green r5+r7)
-#        sit out one extra round and join the r10 band.  Window =
-#        q01–q15 (15) + x30–x44 (15) + x50–x52/x54–x56 (6) +
-#        x59/x66/x72 (3) + x93–x103 (11) = exactly 50.  Nothing was
-#        born in r8.
-#   r10 (this round): the r8 band returns (q16–q29 + x57–x92
-#        remainder + x104–x108 = 50 if taken whole) — that fills the
-#        window, so x45–x49 take the FIRST five x-slots (they sat out
-#        r9 per the r9 carry) and the five r8-band queries with the
-#        freshest double-green history (x88–x92) carry to r11.
-#        Window = q16–q29 (14) + _R10_XBAND (36) = exactly 50:
-#          _R10_XBAND = (45, 46, 47, 48, 49,
-#                        57, 58, 60, *range(62, 66), *range(67, 72),
-#                        73, *range(75, 88),          # x88–x92 → r11
-#                        *range(104, 109))
-#        r11 then owes x88–x92 slots plus whatever r10 rotates out
-#        (the r9 band: q01–q15 + x30–x44 + x50–x52/x54–x56 +
-#        x59/x66/x72 + x93–x103).
-#   r11 (this round): executed exactly as the r10 ledger spelled —
-#        x88–x92 are MANDATORY (last driver-green r8 — two rounds
-#        out by r11) + the r9 band (55 candidates for 45 remaining
-#        slots, all last-green r9) → five carry to r12, the five
-#        with the deepest driver-green history: x40–x44 (green
-#        r1–r3, r5, r7, r9 — five rows each).  Window is EXACTLY:
-#          _R11_XBAND = (*range(30, 40),            # x40–x44 → r12
-#                        50, 51, 52, 54, 55, 56,
-#                        59, 66, 72,
-#                        *range(88, 93),            # mandatory
-#                        *range(93, 104))
-#          _PRIORITY = q01–q15 then _R11_XBAND  (15 + 35 = 50)
-#   r12 (this round): executed exactly as the r11 ledger spelled —
-#        x40–x44 are MANDATORY (carried from r11; last green r9 —
-#        two rounds out by r12) + the r10 band (q16–q29 + x45–x49 +
-#        x57/x58/x60/x62–x65/x67–x71/x73/x75–x87 + x104–x108 = 50)
-#        — that is 55 candidates for 50 slots, so five carry to
-#        r13.  Carry five from the deepest-history group
-#        (x57-family, four green rows each r4/r6/r8/r10):
-#        x57/x58/x60/x62/x63 → r13.  Mechanically:
-#          _R12_XBAND = (*range(40, 45),            # mandatory
-#                        45, 46, 47, 48, 49,
-#                        64, 65, *range(67, 72), 73,
-#                        *range(75, 88),
-#                        *range(104, 109))
-#          _PRIORITY = q16–q29 then _R12_XBAND  (14 + 36 = 50)
-#   r13 (this round): executed exactly as the r12 ledger spelled —
-#        x57/x58/x60/x62/x63 are MANDATORY (carried from r12;
-#        last green r10 — two rounds out by r13) + the r11 band
-#        (q01–q15 + x30–x39 + x50–x52/x54–x56 + x59/x66/x72 +
-#        x88–x103 = 50 if taken whole) — 55 candidates for 50
-#        slots, so five carry to r14.  Carry the five with the
-#        deepest driver-green history: x30–x34 (green r1–r3, r5,
-#        r7, r9, r11 — six rows each) → r14.  Mechanically:
-#          _R13_XBAND = (57, 58, 60, 62, 63,        # mandatory
-#                        *range(35, 40),
-#                        50, 51, 52, 54, 55, 56,
-#                        59, 66, 72,
-#                        *range(88, 104))
-#          _PRIORITY = q01–q15 then _R13_XBAND  (15 + 35 = 50)
-#   r14 (this round): executed as the r13 ledger spelled, with ONE
-#        amendment the r13 verdict ordered (What's wrong #3): x109
-#        was born in the r13 build round but the plan's band ended
-#        at range(104,109), so x109 had NO driver slot in any
-#        window — it now takes its FIRST driver row (the
-#        x97/x98/x104–x108 precedent: new queries enter in their
-#        first available window).  To keep exactly 50 slots, one
-#        more query carries by the ledger's own rule (deepest
-#        driver-green history): x80 (green r4/r6/r8/r10/r12 — five
-#        rows, same depth as the x75–x79 carries) → r15.
-#        x30–x34 are MANDATORY (carried from r13; last green r11 —
-#        two rounds out by r14; this also driver-verifies the r13
-#        x32 PPJoin-entry change) + the r12 band (q16–q29 + x40–x49
-#        + x64/x65/x67–x71/x73 + x81–x87 + x104–x108).
-#        Mechanically:
-#          _R14_XBAND = (30, 31, 32, 33, 34,        # mandatory
-#                        *range(40, 50),
-#                        64, 65, *range(67, 72), 73,
-#                        *range(81, 88),            # x75–x80 → r15
-#                        *range(104, 110))          # x109 first row
-#          _PRIORITY = q16–q29 then _R14_XBAND  (14 + 36 = 50)
-#        r15 then owes x75–x80 plus whatever r14 rotates out (the
-#        r13 band).
-#   INVARIANT: x53/x74 are rows-only sketches — they can never
-#        hash-match and must NEVER occupy a window slot; their error
-#        bounds are pytest'd (tests/test_functions.py) and their
-#        rows-only declaration pinned by tests/test_entry_contract.py
-#        (see README "Rotation rule").
-_R14_XBAND: tuple[int, ...] = (
-    30, 31, 32, 33, 34,                            # mandatory (last green r11)
-    *range(40, 50),
-    64, 65, *range(67, 72), 73,
-    *range(81, 88),                                # x75–x80 → r15
-    *range(104, 110),                              # x109: first driver row
-)
-_PRIORITY: tuple[str, ...] = (
-    *(f"q{i:02d}" for i in range(16, 30)),         # q16..q29
-    *(f"x{i}" for i in _R14_XBAND),
-)
+# every oracle-paired query earns driver-green CORRECTNESS rows (the
+# q21 lesson: the local gate can pass while the driver hash fails).
+# Queries outside the window are still verified every round by the
+# local gate (tools/check_oracle.py), which replicates the driver
+# compare including the typed-divergence check.  Planning rules, the
+# first three checked on every recorded round by
+# tests/test_entry_contract.py:
+# - exactly 50 slots, each a declared oracle-paired query;
+# - x53/x74 are rows-only sketches: they can never hash-match and must
+#   NEVER occupy a slot (their error bounds are pytest'd in
+#   tests/test_functions.py; README "Rotation rule");
+# - every paired query holds a slot in every three consecutive rounds;
+# - a query enters in the first window after its birth;
+# - when the owed set outgrows 50 slots, the queries with the deepest
+#   driver-green history carry to the next round.
+
+
+def _band(qs: range, xs: tuple[int, ...]) -> tuple[str, ...]:
+    return (*(f"q{i:02d}" for i in qs), *(f"x{i}" for i in xs))
+
+
+#: Rotation ledger: driver round → its window, as query-name prefixes in
+#: window order (rounds r1–r9 were all green; CORRECTNESS_r01–r09).
+#: The last round is the window ``queries()`` serves.
+ROTATION: dict[str, tuple[str, ...]] = {
+    "r10": _band(range(16, 30), (*range(45, 50), 57, 58, 60, *range(62, 66),
+                                 *range(67, 72), 73, *range(75, 88),
+                                 *range(104, 109))),
+    "r11": _band(range(1, 16), (*range(30, 40), 50, 51, 52, 54, 55, 56,
+                                59, 66, 72, *range(88, 104))),
+    "r12": _band(range(16, 30), (*range(40, 50), 64, 65, *range(67, 72), 73,
+                                 *range(75, 88), *range(104, 109))),
+    "r13": _band(range(1, 16), (57, 58, 60, 62, 63, *range(35, 40),
+                                50, 51, 52, 54, 55, 56, 59, 66, 72,
+                                *range(88, 104))),
+    # x109 (born r13) takes its first slot; x75–x80 carry to r15
+    "r14": _band(range(16, 30), (*range(30, 35), *range(40, 50), 64, 65,
+                                 *range(67, 72), 73, *range(81, 88),
+                                 *range(104, 110))),
+}
+_PRIORITY: tuple[str, ...] = list(ROTATION.values())[-1]
 
 
 def _ordered(names: list[str]) -> list[str]:

@@ -7,8 +7,10 @@ subcommand here (README "Migrating from the reference"):
 reference                       this CLI
 ==============================  =====================================
 ``python db_extractor.py``      ``… sync --source … --mirror …``
-(first run = backfill,          (backfill-if-empty then incremental,
-then incremental + audit)       always audits — db_extractor.py:254-325)
+(first run = backfill,          (incremental from the newest day; an
+then incremental + audit)       empty mirror gets every row in one
+                                write; always audits —
+                                db_extractor.py:254-325)
 ``./parse_binlogs.sh``          ``… binlog-apply --binlog-text … --mirror …``
 ``python row_integrity.py``     ``… integrity --source … --mirror …``
 (damaged mirror)                ``… repair --mirror …``
@@ -48,10 +50,10 @@ def build_parser() -> argparse.ArgumentParser:
     top = argparse.ArgumentParser(prog="enexory_parquet_export_spark")
     sub = top.add_subparsers(dest="cmd", required=True)
 
-    p = sub.add_parser("sync", help="backfill-if-empty, incremental, audit")
+    p = sub.add_parser("sync", help="incremental (everything into an "
+                                    "empty mirror), then audit")
     _add_source_args(p)
     p.add_argument("--mirror", required=True)
-    p.add_argument("--min-date", default="2010-01-02")
     p.add_argument("--replica", help="second mirror target (O27): the "
                                      "day partitions that differ from "
                                      "the replica's are byte-copied "
@@ -103,8 +105,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "sync":
         from . import pipeline
-        rep = pipeline.run_sync(spark, _source(spark, args), args.mirror,
-                                min_date=args.min_date)
+        rep = pipeline.run_sync(spark, _source(spark, args), args.mirror)
         out.update(source_rows=rep.source_rows, mirror_rows=rep.mirror_rows,
                    matches=rep.matches, difference=rep.difference,
                    per_day_mismatches=rep.per_day_mismatches)

@@ -97,13 +97,23 @@ def incremental_sync(spark: SparkSession, source: DataFrame,
     """Daily sync (db_extractor.py:284-317): refetch the resume day
     wholesale (late-data tolerance by partition rewrite, :284-291) plus
     everything after it, in ONE ranged scan; dynamic partition
-    overwrite keeps untouched days intact.  Returns the refreshed
-    days, sorted."""
+    overwrite keeps untouched days intact.  With no resume day (an
+    empty or sentinel-only mirror) every source row is written.
+
+    Every day written is whole.  The raw ``date_time >= resume`` filter
+    is the one JDBC and parquet push down, but a row can pass it with an
+    older day (``2010/01/01 …`` sorts after ``2010-01-06``; garbage goes
+    to the sentinel day), and overwriting that day from such rows alone
+    would wipe the rest of it.  So only rows whose normalized ``day`` is
+    ``>= resume`` are written; for every ``LAX_DT_FORMATS`` shape their
+    raw text passes the raw filter too.  Returns the refreshed days,
+    sorted."""
+    rows = normalize(source)
     resume = find_resume_point(spark, mirror_path)
     if resume is not None:
-        source = source.filter(F.col("date_time") >= F.lit(resume))
-    return write_day_partitioned(normalize(source).select("day", *MIRROR_COLS),
-                                 mirror_path)
+        rows = (normalize(source.filter(F.col("date_time") >= F.lit(resume)))
+                .filter(F.col("day") >= F.lit(resume)))
+    return write_day_partitioned(rows.select("day", *MIRROR_COLS), mirror_path)
 
 
 def repair(spark: SparkSession, mirror_path: str) -> int:
@@ -147,6 +157,8 @@ def row_integrity(spark: SparkSession, source: DataFrame,
     per-day localization (SURVEY §3.3): the reference can only say THAT
     counts differ; per-day diffs say WHERE.  One aggregation over both
     sides, tagged, gives the per-day counts; totals are their sums.
+    ``matches`` holds only when every day's counts match, so per-day
+    differences that cancel out in the totals still fail the audit.
     The source is scanned in full, the mirror only for its ``day``."""
     sides = (normalize(source).select("day", F.lit(True).alias("src"))
              .unionByName(read_day_partitioned(spark, mirror_path)
@@ -159,14 +171,14 @@ def row_integrity(spark: SparkSession, source: DataFrame,
     n_mir = sum(r["n_mir"] for r in per_day)
     mism = sorted((r["day"], r["n_src"], r["n_mir"]) for r in per_day
                   if r["n_src"] != r["n_mir"])
-    return IntegrityReport(n_src, n_mir, n_src == n_mir, n_mir - n_src, mism)
+    return IntegrityReport(n_src, n_mir, not mism, n_mir - n_src, mism)
 
 
-def run_sync(spark: SparkSession, source: DataFrame, mirror_path: str,
-             min_date: str = "2010-01-02") -> IntegrityReport:
-    """The reference's main() (db_extractor.py:254-325): backfill if
-    the mirror is empty, else incremental; always audit."""
-    if not list_days(spark, mirror_path):
-        historical_backfill(source, mirror_path, min_date)
+def run_sync(spark: SparkSession, source: DataFrame,
+             mirror_path: str) -> IntegrityReport:
+    """The reference's main() (db_extractor.py:254-325): sync, then
+    audit.  The reference backfills an empty mirror first; here the
+    incremental sync of an empty mirror has no resume day and writes
+    every row in its one write, so no separate backfill runs."""
     incremental_sync(spark, source, mirror_path)
     return row_integrity(spark, source, mirror_path)

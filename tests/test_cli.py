@@ -45,6 +45,33 @@ def test_cli_sync_and_integrity(spark, sf_dir, tmp_path, capsys):
     assert rc == 0 and rep["matches"] is True
 
 
+def test_cli_integrity_fails_on_day_mismatches_that_cancel_out(spark, tmp_path,
+                                                              capsys):
+    """Equal totals do not make a match: the mirror holds days A=1 and
+    B=2, the source A=2 and B=1, so the audit fails and exits 1."""
+    from enexory_parquet_export_spark.sources.writer import write_day_partitioned
+
+    a, b = "2010-01-05", "2010-01-06"
+    src_path, mirror = str(tmp_path / "src"), str(tmp_path / "m")
+    write_day_partitioned(spark.createDataFrame(
+        [(a, 1, f"{a} 01:00:00", 1.0, f"{a} 02:00:00"),
+         (b, 2, f"{b} 01:00:00", 2.0, f"{b} 02:00:00"),
+         (b, 3, f"{b} 03:00:00", 3.0, f"{b} 04:00:00")],
+        "day string, id bigint, date_time string, value double, ts string"),
+        mirror)
+    spark.createDataFrame(
+        [(1, f"{a} 01:00:00", 1.0, f"{a} 02:00:00"),
+         (4, f"{a} 05:00:00", 4.0, f"{a} 06:00:00"),
+         (2, f"{b} 01:00:00", 2.0, f"{b} 02:00:00")],
+        "id bigint, date_time string, value double, ts string") \
+        .write.parquet(src_path)
+    rc = main(["integrity", "--source-parquet", src_path, "--mirror", mirror])
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (rep["source_rows"], rep["mirror_rows"], rep["difference"]) == (3, 3, 0)
+    assert rep["matches"] is False and rc == 1
+    assert rep["per_day_mismatches"] == [[a, 2, 1], [b, 1, 2]]
+
+
 def test_cli_binlog_apply(spark, sf_dir, tmp_path, capsys):
     from enexory_parquet_export_spark.operators.binlog import (
         render_binlog_text,

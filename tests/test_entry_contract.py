@@ -176,32 +176,24 @@ def test_day_partitioned_orc_roundtrip(spark, tmp_path):
 
 def test_driver_window_covers_contract_core():
     """The driver's correctness check hashes only the FIRST 50 entries
-    of queries() in iteration order.  Since round 4 the window ROTATES
-    (round-3 verdict/advice): the q01–q29 contract core is always
-    inside it, and the remaining 21 slots cycle through the rest of
-    the inventory so every oracle-paired query eventually earns a
-    driver-green CORRECTNESS row.  Invariants: core present, rotation
-    slots all oracle-paired (rows-only sketches must not waste a
-    slot), and every rotation slot names a real query."""
+    of queries() in iteration order, and the window rotates per round
+    (the ledger ``ROTATION`` in the module).  queries() serves the
+    last recorded round.  Every recorded round holds 50 distinct slots,
+    each a declared oracle-paired query (the rows-only sketches x53/x74
+    must never waste a slot), and every paired query holds a slot in
+    every three consecutive rounds — x109, born r13, excepted."""
+    rounds, windows = zip(*entrymod.ROTATION.items())
     names = list(entrymod.queries())
-    first50 = names[:50]
-    window = set(first50)
-    # r14 window: q16–q29 + x30–x34 (MANDATORY — last driver-green
-    # r11; driver-verifies the r13 x32 PPJoin change) + the r12 band
-    # minus x75–x80 (carried to r15) + x109 (first driver row, per
-    # the r13 verdict) — exactly 50; the r13 band sits out after its
-    # green round — see the rotation ledger in the module
-    must = {f"q{i:02d}" for i in range(16, 30)}
-    must |= {f"x{i}" for i in entrymod._R14_XBAND}
-    prefixes = {n.split("_")[0] for n in window}
-    missing = must - prefixes
-    assert not missing, f"driver window misses rotation set: {sorted(missing)}"
-    # rows-only sketches must NOT waste window slots
-    oracles = entrymod.oracle_sql()
-    no_oracle_in_window = [n for n in first50 if n not in oracles]
-    assert not no_oracle_in_window, (
-        f"rows-only queries waste driver window slots: {no_oracle_in_window}")
-    assert len(first50) == 50 and len(names) >= 50
+    assert len(names) >= 50
+    assert tuple(n.split("_")[0] for n in names[:50]) == windows[-1]
+    paired = {n.split("_")[0] for n in entrymod.oracle_sql()}
+    for rnd, window in entrymod.ROTATION.items():
+        assert len(window) == len(set(window)) == 50, rnd
+        assert set(window) <= paired, (rnd, sorted(set(window) - paired))
+        assert not {"x53", "x74"} & set(window), rnd
+    for i in range(len(windows) - 2):
+        unheld = paired - set().union(*windows[i:i + 3])
+        assert unheld <= {"x109"}, (rounds[i], sorted(unheld))
 
 
 def test_typed_divergence_detector_catches_uncast_window_sum():

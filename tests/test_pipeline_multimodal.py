@@ -90,6 +90,46 @@ class TestPipeline:
         assert rep.matches and not rep.per_day_mismatches, rep
         assert not (tmp_path / "m3g" / "day=2010-01-06" / "stray.parquet").exists()
 
+    def test_late_row_before_resume_day_leaves_its_day_whole(self, spark,
+                                                             tmp_path):
+        """A late row whose raw text passes the resume filter but whose
+        day is before the resume day (``/`` sorts after ``-``) is not
+        loaded: its day keeps its rows instead of being rewritten from
+        the late row alone, and the audit names the day."""
+        mirror = str(tmp_path / "m9")
+        rows = [(1, "2010-01-01 01:00:00", 1.0, "2010-01-01 02:00:00"),
+                (2, "2010-01-01 03:00:00", 2.0, "2010-01-01 04:00:00"),
+                (3, "2010-01-06 01:00:00", 3.0, "2010-01-06 02:00:00")]
+        P.run_sync(spark, src(spark, rows), mirror)
+        rows.append((4, "2010/01/01 12:00:00", 4.0, "2010-01-06 05:00:00"))
+        rep = P.run_sync(spark, src(spark, rows), mirror)
+        assert rep.per_day_mismatches == [("2010-01-01", 3, 2)], rep
+        day = read_day_partitioned(spark, mirror, days=["2010-01-01"])
+        assert sorted(r["id"] for r in day.collect()) == [1, 2]
+
+    def test_first_sync_keeps_every_sentinel_row(self, spark, tmp_path):
+        """The first sync of an empty mirror writes every row in one
+        write: the sentinel day holds the zero-date row and the
+        unparseable one."""
+        mirror = str(tmp_path / "m10")
+        rows = [(1, "2009-12-30 01:00:00", 1.0, "2009-12-30 02:00:00"),
+                (2, "0000-00-00 00:00:00", 2.0, "2010-01-05 02:00:00"),
+                (3, "not a datetime", 3.0, "2010-01-05 03:00:00"),
+                (4, "2010-01-05 01:00:00", 4.0, "2010-01-05 02:00:00")]
+        rep = P.run_sync(spark, src(spark, rows), mirror)
+        assert rep.matches and not rep.per_day_mismatches, rep
+        assert list_days(spark, mirror) == ["0001-01-01", "2009-12-30",
+                                            "2010-01-05"]
+
+    def test_first_sync_job_ceiling(self, spark, tmp_path, count_jobs):
+        """The first sync of an empty mirror is one write plus the
+        audit's schema inference and aggregation; a separate backfill
+        write before it adds jobs."""
+        jobs, rep = count_jobs(P.run_sync, spark, src(spark, ROWS_V1),
+                               str(tmp_path / "m11"))
+        assert rep.matches
+        assert len(jobs) <= 5, jobs
+
     def test_validate_flags(self, spark):
         flagged = P.validate(src(spark, ROWS_V1))
         bad = {r["id"] for r in flagged.filter(~F.col("valid")).collect()}

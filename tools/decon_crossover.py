@@ -213,18 +213,11 @@ def main() -> int:
 
     import duckdb
 
+    from bench import jvm_control
     from enexory_parquet_export_spark.session import get_spark
 
     spark = get_spark("decon-crossover")
-
-    def jvm_control() -> float:
-        # pure-CPU JVM-mode probe (the host has ~2× per-JVM-launch
-        # slow/fast modes): sum over a fixed range, no IO, no shuffle
-        t0 = time.time()
-        spark.range(400_000_000).selectExpr("sum(id)").collect()
-        return round(time.time() - t0, 3)
-
-    print(f"jvm control: {jvm_control()}s (fast host ≈ 0.3–0.5 s)",
+    print(f"jvm control: {jvm_control(spark)}s (fast host ≈ 0.3–0.5 s)",
           flush=True)
     fdir = build_fixture(spark, copies)
     doc_path = os.path.join(fdir, "documents.parquet", "*.parquet")
@@ -290,7 +283,7 @@ def main() -> int:
             "duck_dnf": dnf[0] or duck_rows is None,
             "rows": len(spark_rows),
             "values_match": match if duck_rows is not None else None,
-            "jvm_control": jvm_control(),
+            "jvm_control": jvm_control(spark),
         }
         print(f"{name}: spark {sp_first:.1f}/{sp_steady:.1f}s, "
               f"duck {duck_t if duck_t else 'DNF'}, "

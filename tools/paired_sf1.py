@@ -25,15 +25,16 @@ Timestamps are cast to TIMESTAMP_NTZ before writing so the scaled
 parquet matches the fixture's naive (isAdjustedToUTC=false) layout and
 both engines read identical wall clocks.
 
-Billing (r6 verdict #7 — bench.py's purity-aware steady pass, ported):
-each Spark query runs TWICE via noop write.  The first run bills
+Billing: each Spark query is measured by ``bench.measure_query``,
+bench.py's purity-aware first/steady pass.  The first run bills
 construction + execution (one-off codegen JIT, checkpoint builds).
 The steady run rebuilds from scratch when construction had side
 effects (a moved ``session.MATERIALIZE_COUNT``, any job under the
-construction job group, or a grown CacheManager entry count) — so
-checkpoint prefixes re-materialize inside the timed run — and
-re-executes the same DataFrame object otherwise (full re-optimize +
-re-run; only client-side plan construction is skipped).  The per-query
+construction job group, a grown CacheManager entry count or RDD
+storage-info count) — so checkpoint prefixes re-materialize inside
+the timed run — and re-executes the same DataFrame object otherwise
+(full re-optimize + re-run; only client-side plan construction is
+skipped).  The per-query
 table and the headline ratio use STEADY; first-run totals stay in the
 JSON.  DuckDB runs each oracle once via ``.arrow()`` with a per-query
 interrupt timeout (no build phase to separate; the page cache is warm
@@ -190,29 +191,15 @@ def main() -> int:
         SETTLE = False
 
     import __spark_entry__ as entrymod
-    from enexory_parquet_export_spark import session as _session
+    from bench import jvm_control, measure_query
     from enexory_parquet_export_spark.session import get_spark
 
     spark = get_spark("paired-sf1")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
 
-    def jvm_control() -> float:
-        # pure-CPU JVM-mode probe (decon_crossover's idiom — the host
-        # has slow/fast modes from hypervisor steal): sum over a fixed
-        # range, no IO, no shuffle.  Recorded so cross-round ratio
-        # comparisons can be normalized for host state.
-        t0 = time.perf_counter()
-        spark.range(400_000_000).selectExpr("sum(id)").collect()
-        return round(time.perf_counter() - t0, 3)
-
-    controls = [jvm_control() for _ in range(2)]
-    # reference band (BASELINE.md r11): fast host ≈ 0.3–0.5 s on the
-    # first (JIT-cold) probe, 0.09–0.35 s post-warm; slow host ≥ 1 s
+    controls = [jvm_control(spark) for _ in range(2)]
     print(f"jvm control: {controls} "
           f"(fast host ≈ 0.3–0.5 s cold / 0.09–0.35 s warm)", flush=True)
-    tracker = sc.statusTracker()
-    _cm = spark._jsparkSession.sharedState().cacheManager()
     sf1 = sf_dir_override or build_sf1(spark, copies)
     print(f"sf1 dir: {sf1}", flush=True)
 
@@ -240,33 +227,15 @@ def main() -> int:
     rebuilt: list[str] = []
     duck_t: dict[str, float] = {}
     for name in names:
-        t0 = time.perf_counter()
         try:
-            ck0 = _session.MATERIALIZE_COUNT
-            cached0 = _cm.cachedData().size()
-            sc.setJobGroup(f"sf1-build-{name}", name)
-            df = qs[name](spark, sf1)
-            impure = (_session.MATERIALIZE_COUNT > ck0
-                      or bool(tracker.getJobIdsForGroup(
-                          f"sf1-build-{name}"))
-                      or _cm.cachedData().size() > cached0)
-            sc.setJobGroup(f"sf1-run-{name}", name)
-            df.write.format("noop").mode("overwrite").save()
-            spark_t[name] = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            if impure:
+            m = measure_query(spark, qs[name], sf1, name)
+            spark_t[name], spark_steady[name] = m.first, m.steady
+            spark_build[name] = m.build
+            if m.rebuilt:
                 rebuilt.append(name)
-                df2 = qs[name](spark, sf1)
-                spark_build[name] = round(time.perf_counter() - t0, 3)
-            else:
-                df2 = df
-                spark_build[name] = 0.0
-            df2.write.format("noop").mode("overwrite").save()
-            spark_steady[name] = round(time.perf_counter() - t0, 3)
-            # drop refs, then settle the block store (Python gc +
-            # explicit JVM GC → ContextCleaner unpersists transient
-            # localCheckpoint blocks NOW — see _settle)
-            del df, df2
+            # settle the block store (explicit JVM GC → ContextCleaner
+            # unpersists transient localCheckpoint blocks NOW — see
+            # _settle)
             _settle(spark)
         except Exception as exc:
             print(f"SPARK ERROR {name}: {str(exc)[:200]}", file=sys.stderr)
@@ -394,7 +363,7 @@ def main() -> int:
         print(f"duck DNF: {dnf}")
     if err:
         print(f"spark ERR: {err}")
-    controls.append(jvm_control())
+    controls.append(jvm_control(spark))
     print(f"jvm control (end): {controls[-1]}", flush=True)
     print(json.dumps({"metric": "paired_sf1", "copies": copies,
                       "jvm_control": controls,
