@@ -1,5 +1,6 @@
 from .cdc import (  # noqa: F401
     derive_changelog, consolidate, snapshot_from_inserts, apply_changes,
+    merge_changelog,
     cdc_merge,
 )
 from .components import connected_components  # noqa: F401

@@ -29,9 +29,13 @@ So the consolidated effective op per (day, pk) is::
 
 Scale notes: consolidation is ONE hash aggregation on the natural key
 (day, pk) — no window sort needed (``max_by`` keeps the last payload).
-The merge is a single shuffle-on-key full-outer join; with AQE on, a
-small consolidated changelog against a huge base becomes a broadcast
-join automatically, and only touched day-partitions are rewritten.
+:func:`apply_changes` merges as a single shuffle-on-key full-outer
+join; with AQE on, a small consolidated changelog against a huge base
+becomes a broadcast join automatically.  :func:`merge_changelog` folds
+a raw changelog into its touched days' base rows in one aggregation
+instead, on a ``day`` exchange that the day-partitioned writer reuses:
+the mirror merge runs one shuffle, and only touched day-partitions are
+rewritten.
 """
 
 from __future__ import annotations
@@ -75,6 +79,38 @@ def derive_changelog(events: DataFrame) -> DataFrame:
     )
 
 
+def _last_event_aggs() -> list[Column]:
+    """Per-key aggregates both folds share: the last I and last D
+    ``seq`` and the payload of the overall last event."""
+    return [
+        F.max(F.when(F.col("op") == "I", F.col("seq"))).alias("_last_i"),
+        F.max(F.when(F.col("op") == "D", F.col("seq"))).alias("_last_d"),
+        F.max_by(F.struct("date_time", "value", "ts_epoch"), "seq").alias("_last"),
+    ]
+
+
+def _effective_op() -> Column:
+    """The consolidated op of a key from :func:`_last_event_aggs`."""
+    return (
+        F.when(F.col("_last_i") > F.coalesce(F.col("_last_d"), F.lit(-1)), F.lit("I"))
+         .when(F.col("_last_d").isNotNull(), F.lit("D"))
+         .otherwise(F.lit("U"))
+    )
+
+
+def _last_payload() -> list[Column]:
+    return [F.col("_last.date_time").alias("date_time"),
+            F.col("_last.value").alias("value"),
+            F.col("_last.ts_epoch").alias("ts_epoch")]
+
+
+def _survives(op: Column, in_base: Column) -> Column:
+    """The merge rule table: D drops the key, U keeps it only if the
+    base has it (update-to-missing-pk is a no-op), I always keeps it.
+    A base row no change touches counts as a U of its own payload."""
+    return (op == "I") | ((op == "U") & in_base)
+
+
 def consolidate(changelog: DataFrame) -> DataFrame:
     """Within-batch last-event-wins consolidation per (day, pk).
 
@@ -85,22 +121,8 @@ def consolidate(changelog: DataFrame) -> DataFrame:
 
     Output: ``day, pk, op('I'|'U'|'D'), date_time, value, ts_epoch``.
     """
-    agg = changelog.groupBy("day", "pk").agg(
-        F.max(F.when(F.col("op") == "I", F.col("seq"))).alias("_last_i"),
-        F.max(F.when(F.col("op") == "D", F.col("seq"))).alias("_last_d"),
-        F.max_by(F.struct("date_time", "value", "ts_epoch"), "seq").alias("_last"),
-    )
-    eff_op = (
-        F.when(F.col("_last_i") > F.coalesce(F.col("_last_d"), F.lit(-1)), F.lit("I"))
-         .when(F.col("_last_d").isNotNull(), F.lit("D"))
-         .otherwise(F.lit("U"))
-    )
-    return agg.select(
-        "day", "pk", eff_op.alias("op"),
-        F.col("_last.date_time").alias("date_time"),
-        F.col("_last.value").alias("value"),
-        F.col("_last.ts_epoch").alias("ts_epoch"),
-    )
+    return (changelog.groupBy("day", "pk").agg(*_last_event_aggs())
+            .select("day", "pk", _effective_op().alias("op"), *_last_payload()))
 
 
 def snapshot_from_inserts(changelog: DataFrame, upto_seq) -> DataFrame:
@@ -112,11 +134,8 @@ def snapshot_from_inserts(changelog: DataFrame, upto_seq) -> DataFrame:
     inserts = changelog.filter((F.col("op") == "I") & (F.col("seq") <= upto_seq))
     return (
         inserts.groupBy("day", "pk")
-        .agg(F.max_by(F.struct("date_time", "value", "ts_epoch"), "seq").alias("_r"))
-        .select("day", "pk",
-                F.col("_r.date_time").alias("date_time"),
-                F.col("_r.value").alias("value"),
-                F.col("_r.ts_epoch").alias("ts_epoch"))
+        .agg(F.max_by(F.struct("date_time", "value", "ts_epoch"), "seq").alias("_last"))
+        .select("day", "pk", *_last_payload())
     )
 
 
@@ -131,6 +150,12 @@ def apply_changes(base: DataFrame, changes: DataFrame) -> DataFrame:
 
     Per key:  op='D' → drop;  op='U' → new payload iff base row exists;
     op='I' → new payload unconditionally; no change row → keep base row.
+
+    This stays a join, not :func:`merge_changelog`'s union-fold: when
+    both inputs already arrive hash-partitioned on (day, pk), as in
+    q24, the join adds no exchange and the union-aggregate would add
+    one.  q24 at sf0.1 on 4 cores, 10 interleaved reps with the same
+    result: median 1.00 s as this join, 1.07 s as the fold.
     """
     b = base.select(
         "day", "pk", F.lit(True).alias("_in_base"),
@@ -143,14 +168,8 @@ def apply_changes(base: DataFrame, changes: DataFrame) -> DataFrame:
         F.col("ts_epoch").alias("_c_ts"),
     )
     joined = b.join(c, on=["day", "pk"], how="full_outer")
-    in_base = F.col("_in_base").isNotNull()
     op = F.col("_op")
-
-    keep = (
-        op.isNull()                      # untouched base row
-        | (op == "I")                    # upsert always survives
-        | ((op == "U") & in_base)        # update only if key exists
-    )
+    keep = _survives(F.coalesce(op, F.lit("U")), F.col("_in_base").isNotNull())
     # after the keep-filter, any surviving I/U row takes the change payload
     take_change = op.isin("I", "U")
     return (
@@ -162,6 +181,39 @@ def apply_changes(base: DataFrame, changes: DataFrame) -> DataFrame:
             F.when(take_change, F.col("_c_ts")).otherwise(F.col("_b_ts")).alias("ts_epoch"),
         )
     )
+
+
+def merge_changelog(base: DataFrame, changelog: DataFrame) -> DataFrame:
+    """``apply_changes(base, consolidate(changelog))`` as ONE aggregation
+    on the day-partitioned writer's own exchange.
+
+    ``base``      : day, pk, date_time, value, ts_epoch — one row per
+                    (day, pk), as every merge write leaves it
+    ``changelog`` : raw (unconsolidated) seq, pk, op, date_time, value,
+                    ts_epoch, day — ``seq`` unique, as for
+                    :func:`consolidate`
+
+    The base rows join the changelog as U events at ``seq =
+    Long.MinValue``, so every change outranks them in ``max_by`` and
+    none of them counts as an I or D.  The union is repartitioned by
+    ``day`` and grouped by (day, pk) once: ``hashpartitioning(day)``
+    already satisfies the (day, pk) grouping, so the aggregation adds
+    no exchange, and it is the partitioning
+    :func:`..sources.writer.write_day_partitioned` asks for, so the
+    planner drops the writer's ``repartition("day")`` too.  All of a
+    day's rows fold in the one task that writes that day's file.
+    """
+    payload = ("date_time", "value", "ts_epoch")
+    tagged = base.select(
+        "day", "pk", F.lit(-(1 << 63)).cast("bigint").alias("seq"),
+        F.lit("U").alias("op"), *payload, F.lit(True).alias("_in_base"),
+    ).unionByName(changelog.select(
+        "day", "pk", "seq", "op", *payload, F.lit(False).alias("_in_base"),
+    ))
+    folded = (tagged.repartition("day").groupBy("day", "pk")
+              .agg(*_last_event_aggs(), F.bool_or("_in_base").alias("_in_base")))
+    return (folded.filter(_survives(_effective_op(), F.col("_in_base")))
+            .select("day", "pk", *_last_payload()))
 
 
 def merge_into_sql(base_table: str, changes_rel: str, *,

@@ -159,10 +159,14 @@ def row_integrity(spark: SparkSession, source: DataFrame,
     sides, tagged, gives the per-day counts; totals are their sums.
     ``matches`` holds only when every day's counts match, so per-day
     differences that cancel out in the totals still fail the audit.
-    The source is scanned in full, the mirror only for its ``day``."""
+    The source is scanned in full.  The mirror is read with a declared
+    schema of its partition column alone, ``day string``: no job infers
+    the data schema, and parquet counts the rows from the file footers
+    (as row_integrity.py:68 does).  So a mirror directory with no data
+    files audits as zero rows."""
+    mirror = spark.read.schema("day string").parquet(mirror_path)
     sides = (normalize(source).select("day", F.lit(True).alias("src"))
-             .unionByName(read_day_partitioned(spark, mirror_path)
-                          .select("day", F.lit(False).alias("src"))))
+             .unionByName(mirror.select("day", F.lit(False).alias("src"))))
     per_day = (sides.groupBy("day")
                .agg(F.count_if("src").alias("n_src"),
                     F.count_if(~F.col("src")).alias("n_mir"))

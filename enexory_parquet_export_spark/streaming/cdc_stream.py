@@ -6,8 +6,9 @@ The reference polls binlogs on a cron, consolidates the window's
 events per (day, pk), and merges them into the per-day parquet files.
 That is exactly the micro-batch model: ``readStream`` over an
 append-only changelog directory, and each micro-batch runs the SAME
-batch operators (operators.cdc.consolidate + apply_changes) against
-the current mirror, writing back with dynamic partition overwrite.
+batch merge (operators.cdc.merge_changelog, the one-aggregation form
+of consolidate + apply_changes) against the current mirror, writing
+back with dynamic partition overwrite.
 
 Late data: the reference tolerates late rows in the newest day by
 refetching that whole day (db_extractor.py:284-291) — partition
@@ -17,11 +18,12 @@ any late event simply lands in a later micro-batch and merges into its
 arrival time.  ``windowed_counts`` below shows the watermarked-window
 variant for aggregations that DO need bounded state.
 
-Scale posture: each micro-batch shuffles only its consolidated
-changelog (small) against the touched day-partitions of the base
-(read from their directories only, so the mirror is never listed
-whole); state never accumulates in the stream — the mirror on disk IS
-the state, the same copy-on-write philosophy as the reference.
+Scale posture: each micro-batch shuffles its changelog (small) and
+the touched day-partitions of the base (read from their directories
+only, so the mirror is never listed whole) once, by ``day``, into the
+tasks that write those days; state never accumulates in the stream —
+the mirror on disk IS the state, the same copy-on-write philosophy as
+the reference.
 """
 
 from __future__ import annotations
@@ -37,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.cdc import apply_changes, consolidate
+from ..operators.cdc import merge_changelog
 from ..sources.writer import (
     list_days,
     read_day_partitioned,
@@ -70,20 +72,21 @@ def stream_changelog(spark: SparkSession, path: str,
 
 
 def merge_batch(spark: SparkSession, batch: DataFrame, mirror_path: str) -> list[str]:
-    """One micro-batch merge: consolidate the batch, read the base from
-    the touched days' directories only, apply
-    delete→update-if-exists→upsert, rewrite the days the merge produced,
-    then drop the touched days it left empty.  One collect of the
-    touched days, then the write.  Returns the touched days, sorted:
-    every day the merge rewrote or removed.
+    """One micro-batch merge: read the base from the touched days'
+    directories only, fold the batch into it
+    (delete→update-if-exists→upsert, :func:`..operators.cdc.merge_changelog`),
+    rewrite the days the merge produced, then drop the touched days it
+    left empty.  Its Spark jobs: the touched-day collect, the base
+    read's schema inference, then the merge — one shuffle, by ``day``,
+    which the write reuses — and its write.  Returns the touched days,
+    sorted: every day the merge rewrote or removed.
 
     The base read infers its schema from the mirror's files, so a
     mirror in another schema (``sync`` writes ``id``/``ts``) fails the
     ``select`` below before anything is written.  When no touched day
     exists yet, one existing day is opened for that check alone: the
     ``day`` filter prunes all of its files."""
-    changes = consolidate(batch)
-    touched = sorted(r["day"] for r in changes.select("day").distinct().collect())
+    touched = sorted(r["day"] for r in batch.select("day").distinct().collect())
     if not touched:
         return []
     existing = list_days(spark, mirror_path)
@@ -97,7 +100,7 @@ def merge_batch(spark: SparkSession, batch: DataFrame, mirror_path: str) -> list
         base = spark.createDataFrame(
             [], "day string, pk bigint, date_time string, value double, ts_epoch bigint")
     remove_empty_days(spark, mirror_path, touched,
-                      write_day_partitioned(apply_changes(base, changes), mirror_path))
+                      write_day_partitioned(merge_changelog(base, batch), mirror_path))
     return touched
 
 
@@ -164,8 +167,9 @@ def start_binlog_text_stream(spark: SparkSession, binlog_dir: str,
                              max_files_per_trigger: int | None = None,
                              available_now: bool = True) -> StreamingQuery:
     """End-to-end streaming CDC from RAW binlog text to the mirror:
-    tail the segment directory → parse pseudo-SQL → consolidate →
-    delete→update-if-exists→upsert merge, all inside ``foreachBatch``.
+    tail the segment directory → parse pseudo-SQL → fold into the
+    touched days (delete→update-if-exists→upsert, :func:`merge_batch`),
+    all inside ``foreachBatch``.
 
     The parse uses window functions (block assembly), which Structured
     Streaming forbids on the unbounded plan — but each micro-batch is

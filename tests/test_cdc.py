@@ -250,7 +250,7 @@ def test_merge_clause_table_matches_apply_changes(spark, seed):
 # ---------------------------------------------------------------------------
 
 try:
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
     HAVE_HYP = True
 except ImportError:          # pragma: no cover
@@ -307,3 +307,44 @@ if HAVE_HYP:
         merged = run_merge_clauses(
             base, [(pk, op, v) for pk, (op, v) in cons.items()])
         assert merged == sequential_replay(base, events)
+
+    # Each case is one day of its own, so one Spark merge checks a list
+    # of (base, batch) pairs; the named example holds, in day order:
+    # base-only keys next to an updated one, U on a missing key, D-then-I
+    # on a base key, an I-D-U chain with and without a base row, and a
+    # batch that deletes every row of its day.
+    _NAMED_CASES = [
+        ({1: 1.0, 2: 2.0}, [(1, 1, "U", 5.0)]),
+        ({}, [(1, 3, "U", 1.0)]),
+        ({4: 1.0}, [(1, 4, "D", 0.0), (2, 4, "I", 7.0)]),
+        ({}, [(1, 5, "I", 1.0), (2, 5, "D", 0.0), (3, 5, "U", 3.0)]),
+        ({5: 9.0}, [(1, 5, "I", 1.0), (2, 5, "D", 0.0), (3, 5, "U", 3.0)]),
+        ({1: 1.0, 2: 2.0}, [(1, 1, "D", 0.0), (2, 2, "D", 0.0)]),
+    ]
+
+    @settings(max_examples=20, deadline=None)
+    @given(cases=st.lists(st.tuples(_base, _events), min_size=1, max_size=8))
+    @example(cases=_NAMED_CASES)
+    def test_fused_fold_equals_join_and_sequential_replay(spark, cases):
+        """merge_changelog(base, batch) ≡ apply_changes(base,
+        consolidate(batch)) ≡ sequential replay, row for row."""
+        from enexory_parquet_export_spark.operators.cdc import merge_changelog
+
+        def day(i):
+            return f"2024-01-{i + 1:02d}"
+
+        base = spark.createDataFrame(
+            [(day(i), pk, f"{day(i)} 00:00:00", v, 1700000000)
+             for i, (b, _) in enumerate(cases) for pk, v in b.items()],
+            BASE_SCHEMA)
+        log = spark.createDataFrame(
+            [(seq, pk, op, f"{day(i)} 00:00:{seq % 60:02d}", v,
+              1700000000 + seq, day(i))
+             for i, (_, evs) in enumerate(cases) for seq, pk, op, v in evs],
+            SCHEMA)
+        fused = sorted(merge_changelog(base, log).collect())
+        joined = sorted(apply_changes(base, consolidate(log)).collect())
+        assert fused == joined
+        expected = {(day(i), pk): v for i, (b, evs) in enumerate(cases)
+                    for pk, v in sequential_replay(b, evs).items()}
+        assert {(r["day"], r["pk"]): r["value"] for r in fused} == expected

@@ -123,12 +123,12 @@ class TestPipeline:
 
     def test_first_sync_job_ceiling(self, spark, tmp_path, count_jobs):
         """The first sync of an empty mirror is one write plus the
-        audit's schema inference and aggregation; a separate backfill
-        write before it adds jobs."""
+        audit's aggregation; a separate backfill write before it, or a
+        schema inference in the audit, adds jobs."""
         jobs, rep = count_jobs(P.run_sync, spark, src(spark, ROWS_V1),
                                str(tmp_path / "m11"))
         assert rep.matches
-        assert len(jobs) <= 5, jobs
+        assert len(jobs) <= 4, jobs
 
     def test_validate_flags(self, spark):
         flagged = P.validate(src(spark, ROWS_V1))
@@ -192,25 +192,41 @@ class TestPipeline:
                                           ("2010-01-02", 0, 1),
                                           ("2010-01-08", 1, 0)]
 
+    def test_row_integrity_of_mirror_without_data_files(self, spark, tmp_path):
+        """The audit declares the mirror's ``day`` schema instead of
+        inferring it, so a mirror directory with no data files counts
+        as zero rows on every day instead of failing the read."""
+        mirror = tmp_path / "m9"
+        mirror.mkdir()
+        rep = P.row_integrity(spark, src(spark, ROWS_V1), str(mirror))
+        assert (rep.source_rows, rep.mirror_rows, rep.matches, rep.difference) == \
+            (4, 0, False, -4)
+        assert rep.per_day_mismatches == [("0001-01-01", 1, 0),
+                                          ("2009-12-31", 1, 0),
+                                          ("2010-01-05", 1, 0),
+                                          ("2010-01-06", 1, 0)]
+
     def test_run_sync_job_ceiling(self, spark, tmp_path, count_jobs):
         """An incremental sync plus audit on a small mirror (fewer than
         32 days, so partition discovery runs on the driver) stays within
-        its job budget: the write, then the audit's schema inference and
-        aggregation.  The resume point comes from the listing; a read of
-        the mirror to find it, or a re-read of the source, adds jobs."""
+        its job budget of 4: the write, then the audit's aggregation.  The
+        resume point comes from the listing, and the audit reads the
+        mirror with a declared ``day`` schema; a read of the mirror to
+        find the resume point, a schema inference in the audit, or a
+        re-read of the source adds jobs."""
         mirror = str(tmp_path / "m7")
         P.run_sync(spark, src(spark, ROWS_V1), mirror)
         rows = ROWS_V1 + [(5, "2010-01-07 01:00:00", 5.0, "2010-01-07 02:00:00")]
         jobs, rep = count_jobs(P.run_sync, spark, src(spark, rows), mirror)
         assert rep.matches
-        assert len(jobs) <= 5, jobs
+        assert len(jobs) <= 4, jobs
 
     def test_run_sync_job_ceiling_above_listing_threshold(
             self, spark, tmp_path, count_jobs):
         """On a 40-day mirror a whole-mirror read lists its day
         directories in a Spark job of its own.  The budget grows by that
-        one job, paid by the audit, which must see every day; the
-        resume point still takes none."""
+        one job to 5, paid by the audit, which must see every day; the
+        resume point still takes none, and the audit infers no schema."""
         mirror = str(tmp_path / "m8")
         rows = ROWS_V1 + [(10 + d, f"2010-02-{d:02d} 01:00:00", 1.0,
                            f"2010-02-{d:02d} 02:00:00") for d in range(1, 29)] \
@@ -221,7 +237,7 @@ class TestPipeline:
         rows.append((99, "2010-03-09 01:00:00", 5.0, "2010-03-09 02:00:00"))
         jobs, rep = count_jobs(P.run_sync, spark, src(spark, rows), mirror)
         assert rep.matches and not rep.per_day_mismatches, rep
-        assert len(jobs) <= 6, jobs
+        assert len(jobs) <= 5, jobs
 
 class TestMultimodal:
     def test_extract_features_deterministic(self, spark, sf_dir):
