@@ -45,24 +45,21 @@ def _header_op(t):
     return expr
 
 
-def parse_binlog_text(lines: DataFrame, *, file_col: str = "file",
-                      line_no_col: str = "line_no",
-                      text_col: str = "line") -> DataFrame:
+def parse_binlog_text(lines: DataFrame) -> DataFrame:
     """Raw pseudo-SQL lines → typed changelog rows.
 
-    Input: one row per text line with a file identifier and a
-    monotonically increasing ``line_no`` within the file.
+    Input: ``file, line_no, line`` (and optionally ``file_mtime``), one
+    row per text line, ``line_no`` increasing within the file.
     Output: ``file, seq, pk, op, date_time, value, ts_epoch, day`` —
     ``seq`` is the block's first line number (monotone within a file,
     the binlog-position analog); blocks whose pk parse fails are
     dropped exactly as the reference's ``pk != 0`` flush guard does
     (consolidate.cpp:303-316).
     """
-    t = F.trim(F.col(text_col))
+    t = F.trim(F.col("line"))
     has_mtime = "file_mtime" in lines.columns
     extra = [F.col("file_mtime")] if has_mtime else []
-    base = (lines.select(F.col(file_col).alias("file"),
-                         F.col(line_no_col).alias("_ln"), t.alias("_t"),
+    base = (lines.select("file", F.col("line_no").alias("_ln"), t.alias("_t"),
                          *extra)
                  .filter(F.col("_t") != ""))
     op = _header_op(F.col("_t"))
@@ -357,24 +354,30 @@ def render_binlog_text(changelog: DataFrame, *,
                     "line"))
 
 
-def read_binlog_dir(spark, path: str) -> DataFrame:
-    """Read a directory of rotated binlog pseudo-SQL segments into the
-    ``(file, line_no, line)`` shape :func:`parse_binlog_text` expects.
+def number_lines(segments: DataFrame) -> DataFrame:
+    """Whole-text segments (``file, file_mtime, value``, one row per
+    file) → the ``(file, file_mtime, line_no, line)`` rows
+    :func:`parse_binlog_text` expects.
 
-    ``wholetext`` + ``posexplode(split())`` assigns EXACT per-file line
-    numbers with no reliance on partition read order — correct because
-    binlog segments are small by construction (the writer rotates at a
-    bounded block count; a segment is one mysqlbinlog output, not a
-    100 TB table).  The heavy side is the parse/consolidate after, not
-    this listing-shaped read.
+    ``posexplode(split())`` numbers each file's lines EXACTLY, with no
+    reliance on partition read order — correct because binlog segments
+    are small by construction (the writer rotates at a bounded block
+    count; a segment is one mysqlbinlog output, not a 100 TB table).
     """
-    from pyspark.sql import functions as F
-
-    raw = (spark.read.text(path, wholetext=True)
-           .select(F.col("_metadata.file_path").alias("file"),
-                   F.col("_metadata.file_modification_time")
-                    .alias("file_mtime"),
-                   "value"))
-    return raw.select(
+    return segments.select(
         "file", "file_mtime",
         F.posexplode(F.split("value", "\n")).alias("line_no", "line"))
+
+
+def read_binlog_dir(spark, path: str) -> DataFrame:
+    """Read a directory of rotated binlog pseudo-SQL segments into the
+    ``(file, file_mtime, line_no, line)`` shape :func:`parse_binlog_text`
+    expects: one ``wholetext`` row per segment, then
+    :func:`number_lines`.  The heavy side is the parse/consolidate
+    after, not this listing-shaped read.
+    """
+    return number_lines(spark.read.text(path, wholetext=True)
+                        .select(F.col("_metadata.file_path").alias("file"),
+                                F.col("_metadata.file_modification_time")
+                                 .alias("file_mtime"),
+                                "value"))

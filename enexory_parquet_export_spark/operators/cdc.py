@@ -29,13 +29,14 @@ So the consolidated effective op per (day, pk) is::
 
 Scale notes: consolidation is ONE hash aggregation on the natural key
 (day, pk) — no window sort needed (``max_by`` keeps the last payload).
-:func:`apply_changes` merges as a single shuffle-on-key full-outer
-join; with AQE on, a small consolidated changelog against a huge base
-becomes a broadcast join automatically.  :func:`merge_changelog` folds
-a raw changelog into its touched days' base rows in one aggregation
-instead, on a ``day`` exchange that the day-partitioned writer reuses:
-the mirror merge runs one shuffle, and only touched day-partitions are
-rewritten.
+:func:`merge_changelog` folds a raw changelog into its touched days'
+base rows in one aggregation, on a ``day`` exchange that the
+day-partitioned writer reuses: the mirror merge runs one shuffle, and
+only touched day-partitions are rewritten.  :func:`cdc_merge` is one
+aggregation too, after two small aggregates that find the exact
+median ``seq`` without a global sort.  :func:`apply_changes`, the
+keyed full-outer join, is the reference the tests hold
+:func:`merge_changelog` to.
 """
 
 from __future__ import annotations
@@ -125,20 +126,6 @@ def consolidate(changelog: DataFrame) -> DataFrame:
             .select("day", "pk", _effective_op().alias("op"), *_last_payload()))
 
 
-def snapshot_from_inserts(changelog: DataFrame, upto_seq) -> DataFrame:
-    """Base snapshot = replay of all 'I' rows with seq <= upto_seq,
-    insert-as-upsert (last I wins per (day, pk)) — FIXTURES.md §2.1.
-
-    ``upto_seq`` may be a literal or a Column (e.g. a scalar subquery).
-    """
-    inserts = changelog.filter((F.col("op") == "I") & (F.col("seq") <= upto_seq))
-    return (
-        inserts.groupBy("day", "pk")
-        .agg(F.max_by(F.struct("date_time", "value", "ts_epoch"), "seq").alias("_last"))
-        .select("day", "pk", *_last_payload())
-    )
-
-
 def apply_changes(base: DataFrame, changes: DataFrame) -> DataFrame:
     """Merge consolidated changes into the base: the reference's
     delete → update-if-exists → insert-as-upsert (consolidate.cpp:184-214)
@@ -151,11 +138,7 @@ def apply_changes(base: DataFrame, changes: DataFrame) -> DataFrame:
     Per key:  op='D' → drop;  op='U' → new payload iff base row exists;
     op='I' → new payload unconditionally; no change row → keep base row.
 
-    This stays a join, not :func:`merge_changelog`'s union-fold: when
-    both inputs already arrive hash-partitioned on (day, pk), as in
-    q24, the join adds no exchange and the union-aggregate would add
-    one.  q24 at sf0.1 on 4 cores, 10 interleaved reps with the same
-    result: median 1.00 s as this join, 1.07 s as the fold.
+    The reference the tests hold :func:`merge_changelog` to.
     """
     b = base.select(
         "day", "pk", F.lit(True).alias("_in_base"),
@@ -216,58 +199,44 @@ def merge_changelog(base: DataFrame, changelog: DataFrame) -> DataFrame:
             .select("day", "pk", *_last_payload()))
 
 
-def merge_into_sql(base_table: str, changes_rel: str, *,
-                   key_cols: tuple[str, ...] = ("day", "pk"),
-                   payload_cols: tuple[str, ...] = ("date_time", "value",
-                                                    "ts_epoch"),
-                   op_col: str = "op") -> str:
-    """The ACID-lakehouse twin of :func:`apply_changes`: one ``MERGE
-    INTO`` statement with identical semantics (delete →
-    update-if-exists → insert-as-upsert, consolidate.cpp:184-214).
+def _median_seq(log: DataFrame) -> DataFrame:
+    """One row, ``_split``: the ``ceil(n/2)``-th smallest ``seq`` of
+    ``log`` (NULL when it is empty), found without a global sort.
 
-    The repo's SHIPPED contract is the portable full-outer+CASE above —
-    it runs on any Spark, is oracle-checkable against DuckDB, and with
-    AQE gets the same broadcast-vs-shuffle physical choice a MERGE
-    would.  On a Delta/Iceberg deployment the transactional path is
-    usually preferable (atomic commit, file-level skipping of untouched
-    partitions, concurrent-writer safety); this generator emits that
-    statement so the two paths cannot drift — it is the single source
-    of truth for the clause order, and pytest pins its text against
-    ``apply_changes``'s rule table.  ``changes_rel`` must be a
-    CONSOLIDATED relation (one row per key, :func:`consolidate`), which
-    is also what MERGE itself requires (multiple source matches on one
-    target row raise).
-
-    Clause mapping, per consolidated key:
-
-    * ``op='D'`` + matched   → ``DELETE``  (not matched: no-op — a
-      delete of an absent key vanishes, as in the reference);
-    * ``op='U'`` + matched   → ``UPDATE``  (not matched: no-op —
-      update-to-missing-pk is silently dropped, consolidate.cpp:194);
-    * ``op='I'``             → matched ``UPDATE`` / not-matched
-      ``INSERT`` — the unconditional upsert.
+    ``seq`` is unique, so ``seq <= _split`` holds for the same rows as
+    the oracle's ``seq <= median(seq)``.  The sketch quantiles at
+    0.5 ± 2/accuracy bracket that rank (its rank error is at most
+    n/accuracy); one narrow aggregation then counts the rows below the
+    bracket and sorts the few inside it.  A rank outside the bracket
+    raises instead of splitting near the median.
     """
-    on = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-    sets = ", ".join(f"t.{c} = s.{c}" for c in payload_cols)
-    all_cols = ", ".join((*key_cols, *payload_cols))
-    src_vals = ", ".join(f"s.{c}" for c in (*key_cols, *payload_cols))
-    return (
-        f"MERGE INTO {base_table} t\n"
-        f"USING {changes_rel} s\n"
-        f"ON {on}\n"
-        f"WHEN MATCHED AND s.{op_col} = 'D' THEN DELETE\n"
-        f"WHEN MATCHED AND s.{op_col} IN ('U', 'I') THEN UPDATE SET {sets}\n"
-        f"WHEN NOT MATCHED AND s.{op_col} = 'I' THEN\n"
-        f"  INSERT ({all_cols}) VALUES ({src_vals})"
-    )
+    accuracy = 1000
+    bracket = log.agg(
+        F.count("*").alias("_n"),
+        F.percentile_approx("seq", [0.5 - 2 / accuracy, 0.5 + 2 / accuracy],
+                            accuracy).alias("_q"))
+    seq, lo, hi = F.col("seq"), F.col("_q")[0], F.col("_q")[1]
+    band = log.crossJoin(F.broadcast(bracket)).agg(
+        F.max("_n").alias("_n"),
+        F.count_if(seq < lo).alias("_below"),
+        F.sort_array(F.collect_list(F.when(seq.between(lo, hi), seq))).alias("_band"))
+    idx = F.ceil(F.col("_n") / 2) - F.col("_below")
+    return band.select(
+        F.when(idx.between(1, F.size("_band")), F.element_at("_band", idx.cast("int")))
+         .when(F.col("_n") > 0, F.raise_error(F.lit(
+             "cdc_merge: the median rank fell outside the sketch's bracket")))
+         .alias("_split"))
 
 
-def cdc_merge(events: DataFrame, split_seq=None) -> DataFrame:
-    """End-to-end Q23: derive changelog → snapshot base at the median
-    seq → consolidate the tail → merge.  Returns the final mirror with
-    the reference's output rendering: ``id``=pk, 19-char ``date_time``,
-    nullable ``value``, ``ts`` rendered at fixed UTC+2
-    (consolidate.cpp:45-53).
+def cdc_merge(events: DataFrame) -> DataFrame:
+    """End-to-end Q23 (FIXTURES.md §2.1): the base replays the 'I'
+    events up to the median ``seq``, and every event after it merges
+    on top.  Both replays start from an empty mirror, so together they
+    are one sequential replay of the kept events: one
+    :func:`consolidate`, keeping the keys that survive on an empty base
+    (op 'I').  Returns the final mirror with the reference's output
+    rendering: ``id``=pk, 19-char ``date_time``, nullable ``value``,
+    ``ts`` rendered at fixed UTC+2 (consolidate.cpp:45-53).
     """
     log = derive_changelog(events)
     # NO checkpoint on the changelog (the token/input-class rule,
@@ -276,31 +245,9 @@ def cdc_merge(events: DataFrame, split_seq=None) -> DataFrame:
     # events — because the derivation is scan+project (recomputing it
     # per consumer pipelines into each branch's partial agg) while
     # the block store pays write + memory pressure on 100M rows.
-    if split_seq is None:
-        # compute the median split INSIDE the plan: a 1-row aggregate
-        # broadcast-crossed into the changelog — no driver collect, no
-        # extra job per invocation (callers that already know the split
-        # pass it and skip even this)
-        # APPROXIMATE median: the merged mirror is split-invariant by
-        # construction (snapshot-at-split + replay-after-split yields
-        # the same final state for ANY split point), so the split only
-        # needs to be NEAR the middle for balance — and Spark's exact
-        # median is an object-hash aggregate that measured 34 s of
-        # q24's 40 s total at 10M changes, while the single-pass
-        # approx sketch reads in ~1 s.
-        med = log.agg(F.percentile_approx("seq", F.lit(0.5), F.lit(1000))
-                       .alias("_split_seq"))
-        log = log.crossJoin(F.broadcast(med))
-        split_col = F.col("_split_seq")
-    else:
-        split_col = F.lit(split_seq)
-    base = snapshot_from_inserts(log, split_col)
-    tail = consolidate(log.filter(F.col("seq") > split_col))
-    merged = apply_changes(base, tail)
-    return merged.select(
-        F.col("day"),
-        F.col("pk").alias("id"),
-        "date_time",
-        "value",
-        utc2_render(F.col("ts_epoch")).alias("ts"),
-    )
+    log = log.crossJoin(F.broadcast(_median_seq(log)))
+    seq, split = F.col("seq"), F.col("_split")
+    kept = log.filter(((F.col("op") == "I") & (seq <= split)) | (seq > split))
+    return (consolidate(kept).filter(_survives(F.col("op"), F.lit(False)))
+            .select(F.col("day"), F.col("pk").alias("id"), "date_time", "value",
+                    utc2_render(F.col("ts_epoch")).alias("ts")))

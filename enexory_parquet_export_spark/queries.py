@@ -737,8 +737,7 @@ FROM merged
 WHERE op IS NULL OR op = 'I' OR (op = 'U' AND in_base)
 ORDER BY day, id""")
 def q24(spark, sf_dir):
-    return stable_sort(cdc.cdc_merge(_t(spark, sf_dir, "events")),
-                       "day", "id")
+    return cdc.cdc_merge(_t(spark, sf_dir, "events")).orderBy("day", "id")
 
 
 # --------------------------------------------------------------------------

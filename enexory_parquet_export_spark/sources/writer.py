@@ -31,30 +31,24 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_day_partitioned(df: DataFrame, path: str,
-                          mode: str = "overwrite",
-                          file_format: str = "parquet") -> list[str]:
-    """Write partitioned by ``day`` with dynamic partition overwrite;
-    returns the sorted days written (``[]`` for an empty ``df``).
+def write_day_partitioned(df: DataFrame, path: str) -> list[str]:
+    """Write parquet (snappy by session conf) partitioned by ``day``
+    with dynamic partition overwrite; returns the sorted days written
+    (``[]`` for an empty ``df``).
 
-    ``mode="overwrite"`` + partitionOverwriteMode=dynamic rewrites only
-    the day-partitions present in ``df`` — the Spark-native equivalent
-    of the reference's per-day file overwrite
+    Overwrite + partitionOverwriteMode=dynamic rewrites only the
+    day-partitions present in ``df`` — the Spark-native equivalent of
+    the reference's per-day file overwrite
     (Parquet Export/db_extractor.py:247-248).  The days are observed
     above the exchange: below it, AQE drops an empty input's write
     stage and the metric never arrives.
-
-    ``file_format`` selects the columnar sink: ``parquet`` (the
-    reference's mirror format, snappy by session conf) or ``orc``
-    (same partition contract, same pushdown/pruning story).
     """
     written = Observation()
     (df.repartition("day")  # one shuffle → at most one writer task per day
        .observe(written, F.collect_set("day").alias("days"))
-       .write.mode(mode)
+       .write.mode("overwrite")
        .partitionBy("day")
-       .format(file_format)
-       .save(path))
+       .parquet(path))
     return sorted(written.get["days"])
 
 
@@ -99,8 +93,7 @@ def remove_empty_days(spark: SparkSession, path: str,
     return removed
 
 
-def read_day_partitioned(spark: SparkSession, path: str,
-                         file_format: str = "parquet", *,
+def read_day_partitioned(spark: SparkSession, path: str, *,
                          days: list[str] | None = None) -> DataFrame:
     """Read the mirror back; ``day`` comes from the directory layout,
     so day-filters become partition pruning (no data scan).
@@ -115,7 +108,7 @@ def read_day_partitioned(spark: SparkSession, path: str,
     is cast back to the string it is everywhere else (inferred, it is
     a ``date``).
     """
-    reader = spark.read.format(file_format)
+    reader = spark.read.format("parquet")
     if days is None:
         df = reader.load(path)
     else:

@@ -15,8 +15,7 @@ refetching that whole day (db_extractor.py:284-291) — partition
 rewrite, not row-level watermarking.  The merge path inherits that:
 any late event simply lands in a later micro-batch and merges into its
 (old) day partition, because the merge is keyed by (day, pk), not by
-arrival time.  ``windowed_counts`` below shows the watermarked-window
-variant for aggregations that DO need bounded state.
+arrival time.
 
 Scale posture: each micro-batch shuffles its changelog (small) and
 the touched day-partitions of the base (read from their directories
@@ -126,21 +125,6 @@ def start_cdc_merge_stream(changelog: DataFrame, mirror_path: str,
     return writer.start()
 
 
-def windowed_counts(changelog: DataFrame, *, window: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
-    """Watermarked per-(window, op) event counts — the bounded-state
-    streaming aggregate the reference never had (its audit, O18, is a
-    full recount).  Late rows beyond the watermark are dropped;
-    within it, counts self-correct."""
-    with_ts = changelog.withColumn(
-        "event_time", F.to_timestamp(F.from_unixtime(F.col("ts_epoch"))))
-    return (with_ts
-            .withWatermark("event_time", watermark)
-            .groupBy(F.window("event_time", window).alias("w"), "op")
-            .agg(F.count("*").alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "op", "n_events"))
-
-
 def stream_binlog_text(spark: SparkSession, path: str,
                        max_files_per_trigger: int | None = None) -> DataFrame:
     """``readStream`` over a directory of rotated binlog pseudo-SQL
@@ -148,9 +132,9 @@ def stream_binlog_text(spark: SparkSession, path: str,
     ``parse_binlogs.sh`` tail), not a pre-typed changelog.
 
     ``wholetext`` makes each arriving segment ONE row, so per-file
-    line numbers are exact regardless of partitioning (same argument
-    as ``operators.binlog.read_binlog_dir``); a segment must be
-    complete when it lands, which rotation guarantees.
+    line numbers are exact regardless of partitioning
+    (``operators.binlog.number_lines``); a segment must be complete
+    when it lands, which rotation guarantees.
     """
     reader = spark.readStream
     if max_files_per_trigger:
@@ -188,16 +172,13 @@ def start_binlog_text_stream(spark: SparkSession, binlog_dir: str,
     reference's sequential per-segment apply regardless of trigger
     batching.
     """
-    from ..operators.binlog import assign_global_seq, parse_binlog_text
+    from ..operators.binlog import assign_global_seq, number_lines, parse_binlog_text
 
     raw = stream_binlog_text(spark, binlog_dir,
                              max_files_per_trigger=max_files_per_trigger)
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
-        lines = batch.select(
-            "file", "file_mtime",
-            F.posexplode(F.split("value", "\n")).alias("line_no", "line"))
-        changelog = assign_global_seq(parse_binlog_text(lines))
+        changelog = assign_global_seq(parse_binlog_text(number_lines(batch)))
         merge_batch(batch.sparkSession, changelog, mirror_path)
 
     writer = (raw.writeStream

@@ -36,8 +36,8 @@ def test_compact_days_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
     ev = ev.filter(F.col("day").isin(five))
     # fragment the way CDC merges do: one small file per day per batch
     for i in range(3):
-        write_day_partitioned(ev.filter(F.col("event_id") % 3 == i),
-                              path, mode="append")
+        (ev.filter(F.col("event_id") % 3 == i)
+           .write.mode("append").partitionBy("day").parquet(path))
     before = day_file_stats(spark, path)
     assert all(n > 1 for n, _ in before.values())
     rows_before = sorted(map(tuple, read_day_partitioned(spark, path)

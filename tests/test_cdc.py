@@ -13,7 +13,9 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from enexory_parquet_export_spark.operators.cdc import (
+    OP_MAPPING,
     apply_changes,
+    cdc_merge,
     consolidate,
     derive_changelog,
 )
@@ -173,78 +175,12 @@ def test_derive_changelog_shape(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# merge_into_sql — the ACID-lakehouse twin of apply_changes (round-3
-# verdict item 7).  Delta/Iceberg are not installed here, so the MERGE
-# clause semantics are executed by a tiny spec-faithful interpreter
-# (per source row: first matching WHEN clause wins) and diffed against
-# apply_changes on randomized consolidated batches — if the generated
-# clause order ever drifts from the portable path, this fails.
-# ---------------------------------------------------------------------------
-
-def run_merge_clauses(base: dict, changes: list) -> dict:
-    """Interpret merge_into_sql's clause table per the SQL MERGE spec:
-    matched+D → DELETE; matched+U/I → UPDATE; not-matched+I → INSERT;
-    anything else → no-op.  ``changes`` is consolidated (unique keys)."""
-    state = dict(base)
-    for pk, op, value in changes:
-        if pk in state:
-            if op == "D":
-                del state[pk]
-            elif op in ("U", "I"):
-                state[pk] = value
-        elif op == "I":
-            state[pk] = value
-    return state
-
-
-def test_merge_into_sql_text_pins_clause_order():
-    from enexory_parquet_export_spark.operators.cdc import merge_into_sql
-
-    sql = merge_into_sql("mirror.events_base", "changes_v")
-    # delete clause must precede the update clause, which must precede
-    # the insert clause — and each carries the exact op guard
-    i_del = sql.index("WHEN MATCHED AND s.op = 'D' THEN DELETE")
-    i_upd = sql.index("WHEN MATCHED AND s.op IN ('U', 'I') THEN UPDATE SET "
-                      "t.date_time = s.date_time, t.value = s.value, "
-                      "t.ts_epoch = s.ts_epoch")
-    i_ins = sql.index("WHEN NOT MATCHED AND s.op = 'I' THEN")
-    assert i_del < i_upd < i_ins
-    assert sql.startswith("MERGE INTO mirror.events_base t\nUSING changes_v s\n"
-                          "ON t.day = s.day AND t.pk = s.pk")
-    assert "INSERT (day, pk, date_time, value, ts_epoch) "\
-           "VALUES (s.day, s.pk, s.date_time, s.value, s.ts_epoch)" in sql
-
-
-@pytest.mark.parametrize("seed", [3, 99, 2024])
-def test_merge_clause_table_matches_apply_changes(spark, seed):
-    rng = random.Random(seed)
-    base_rows = [(pk, float(rng.randint(0, 50)))
-                 for pk in rng.sample(range(40), 15)]
-    # consolidated batch: one (op, value) per key, keys random
-    batch = [(pk, rng.choice("IUD"), float(rng.randint(0, 99)))
-             for pk in rng.sample(range(40), 25)]
-
-    expected = run_merge_clauses(dict(base_rows), batch)
-
-    base = base_df(spark, base_rows)
-    changes = spark.createDataFrame(
-        [(D, pk, op, f"{D} 01:00:00", v, 1700000000) for pk, op, v in batch],
-        "day string, pk bigint, op string, date_time string, value double, "
-        "ts_epoch bigint")
-    actual = {pk: v for (_, pk), v in
-              merged_dict(apply_changes(base, changes)).items()}
-    assert actual == expected
-
-
-# ---------------------------------------------------------------------------
 # Hypothesis: consolidation + clause-table apply ≡ TRUE sequential
 # replay.  The reference never applies events one at a time — it
 # consolidates into maps first — but its CLAIM (consolidate.cpp:56-109
 # + 184-214) is that the consolidated apply equals sequential
-# semantics: I upserts, U updates-if-exists, D deletes.  The engine's
-# CASE/WHEN encoding (apply_changes) and the MERGE clause table
-# (merge_into_sql) both implement the consolidated form; this property
-# pins the algebra itself against the sequential definition with
+# semantics: I upserts, U updates-if-exists, D deletes.  This property
+# pins the consolidated algebra against the sequential definition with
 # shrinking, covering orderings the seeded differential tests may miss
 # (U-before-I on a missing key, D-then-U, I-D-I chains, ...).
 # ---------------------------------------------------------------------------
@@ -255,22 +191,6 @@ try:
     HAVE_HYP = True
 except ImportError:          # pragma: no cover
     HAVE_HYP = False
-
-
-def consolidate_pure(events):
-    """Mirror of operators.cdc.consolidate's algebra on plain tuples:
-    events = [(seq, pk, op, value)] with unique seqs → {pk: (op, val)}."""
-    by_key = {}
-    for seq, pk, op, value in sorted(events):
-        k = by_key.setdefault(pk, {"last_i": -1, "last_d": -1, "last": None})
-        if op == "I":
-            k["last_i"] = seq
-        elif op == "D":
-            k["last_d"] = seq
-        k["last"] = value
-    return {pk: ("I" if k["last_i"] > k["last_d"]
-                 else "D" if k["last_d"] >= 0 else "U", k["last"])
-            for pk, k in by_key.items()}
 
 
 def sequential_replay(base, events):
@@ -303,10 +223,7 @@ if HAVE_HYP:
     @settings(max_examples=300, deadline=None)
     @given(base=_base, events=_events)
     def test_consolidated_apply_equals_sequential_replay(base, events):
-        cons = consolidate_pure(events)
-        merged = run_merge_clauses(
-            base, [(pk, op, v) for pk, (op, v) in cons.items()])
-        assert merged == sequential_replay(base, events)
+        assert replay_oracle(base, events) == sequential_replay(base, events)
 
     # Each case is one day of its own, so one Spark merge checks a list
     # of (base, batch) pairs; the named example holds, in day order:
@@ -348,3 +265,102 @@ if HAVE_HYP:
         expected = {(day(i), pk): v for i, (b, evs) in enumerate(cases)
                     for pk, v in sequential_replay(b, evs).items()}
         assert {(r["day"], r["pk"]): r["value"] for r in fused} == expected
+
+
+# ---------------------------------------------------------------------------
+# q24 — FIXTURES.md §2.1: the base replays the 'I' events up to the
+# median event_id, and every later event merges on top.
+# ---------------------------------------------------------------------------
+
+EVENTS_SCHEMA = ("event_id bigint, ts string, user_id bigint, "
+                 "event_type string, value double")
+
+
+def q24_model(events):
+    """FIXTURES.md §2.1 on plain tuples: events = [(event_id, ts,
+    user_id, event_type, value)] with unique ids → {(day, id):
+    (date_time, value, ts at UTC+2)}."""
+    import statistics
+    from datetime import datetime, timedelta
+
+    s0 = statistics.median(e[0] for e in events) if events else None
+    log = [(eid, (ts[:10], uid), OP_MAPPING[etype],
+            (ts, None if etype == "purchase" else value))
+           for eid, ts, uid, etype, value in events]
+    base = {}
+    for seq, key, op, payload in sorted(log):
+        if op == "I" and seq <= s0:
+            base[key] = payload
+    final = sequential_replay(base, [e for e in log if e[0] > s0])
+    fmt = "%Y-%m-%d %H:%M:%S"
+    return {key: (dt, v, (datetime.strptime(dt, fmt) + timedelta(hours=2)).strftime(fmt))
+            for key, (dt, v) in final.items()}
+
+
+def test_q24_splits_at_the_exact_median(spark, tmp_path):
+    """1,000 events whose lower median event_id is 5036, where the
+    sketch median of a single-partition read returns 5035.  Event 5036
+    deletes a key whose only other event is an earlier insert: at the
+    median it belongs to the base, which replays inserts only, so the
+    key survives, as the DuckDB oracle keeps it."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from datetime import datetime, timedelta
+
+    from enexory_parquet_export_spark.queries import ORACLE_SQL, SPARK_QUERIES
+
+    rng = random.Random(1)
+    ids = rng.sample(range(10_000), 1_000)
+    assert sorted(ids)[499] == 5036
+    special = {min(ids): "signup", 5036: "error"}     # user 99's only events
+    rows = []
+    for eid in ids:
+        uid, etype = ((99, special[eid]) if eid in special
+                      else (rng.randrange(10), rng.choice(sorted(OP_MAPPING))))
+        day = 0 if uid == 99 else eid % 3
+        rows.append((eid, datetime(2024, 1, 1) + timedelta(days=day, seconds=eid),
+                     uid, etype, float(rng.randint(0, 99))))
+    cols = list(zip(*rows))
+    pq.write_table(pa.table({
+        "event_id": pa.array(cols[0], pa.int64()),
+        "ts": pa.array(cols[1], pa.timestamp("us")),
+        "user_id": pa.array(cols[2], pa.int64()),
+        "event_type": pa.array(cols[3], pa.string()),
+        "value": pa.array(cols[4], pa.float64()),
+        "props": pa.array([None] * len(rows), pa.string()),
+    }), str(tmp_path / "events.parquet"))
+
+    got = [tuple(r) for r in SPARK_QUERIES["q24_cdc_merge"](spark, str(tmp_path)).collect()]
+    assert [r[1] for r in got].count(99) == 1
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/events.parquet')")
+    assert sorted(got) == sorted(con.execute(ORACLE_SQL["q24_cdc_merge"]).fetchall())
+
+
+if HAVE_HYP:
+    _q24_events = st.lists(
+        st.tuples(st.sampled_from(["2024-01-01", "2024-01-02"]),
+                  st.integers(0, 86_399),                # second of the day
+                  st.integers(0, 3),                     # user_id
+                  st.sampled_from(sorted(OP_MAPPING)),
+                  st.integers(0, 99).map(float)),
+        max_size=60).flatmap(lambda body: st.lists(
+            st.integers(0, 100_000), min_size=len(body), max_size=len(body),
+            unique=True).map(lambda ids: [
+                (eid, f"{day} {sec // 3600:02d}:{sec // 60 % 60:02d}:{sec % 60:02d}",
+                 uid, etype, v)
+                for eid, (day, sec, uid, etype, v) in zip(ids, body)]))
+
+    @settings(max_examples=15, deadline=None)
+    @given(events=_q24_events)
+    def test_q24_equals_split_replay_model(spark, events):
+        """cdc_merge ≡ the §2.1 model: the exact median, the last I at
+        or below it per key, then a sequential replay of the rest.  The
+        median is global, so each example is a Spark job of its own."""
+        df = (spark.createDataFrame(events, EVENTS_SCHEMA)
+              .withColumn("ts", F.to_timestamp("ts")))
+        got = {(r["day"], r["id"]): (r["date_time"], r["value"], r["ts"])
+               for r in cdc_merge(df).collect()}
+        assert got == q24_model(events)

@@ -150,30 +150,6 @@ def test_day_partitioned_write_returns_days_written(spark, tmp_path):
     assert sorted(map(tuple, read_day_partitioned(spark, path).collect())) == before
 
 
-def test_day_partitioned_orc_roundtrip(spark, tmp_path):
-    """Same partition contract over the ORC sink: dynamic per-day
-    overwrite, partition listing, and pruning-compatible layout."""
-    from enexory_parquet_export_spark.sources.writer import (
-        list_days,
-        read_day_partitioned,
-        write_day_partitioned,
-    )
-
-    df = spark.createDataFrame(
-        [("2024-01-01", 1, "2024-01-01 00:00:01", 1.0, 100),
-         ("2024-01-02", 2, "2024-01-02 00:00:02", None, 200)],
-        "day string, pk bigint, date_time string, value double, ts_epoch bigint")
-    path = str(tmp_path / "mirror_orc")
-    write_day_partitioned(df, path, file_format="orc")
-    assert sorted(list_days(spark, path)) == ["2024-01-01", "2024-01-02"]
-
-    upd = df.filter(F.col("day") == "2024-01-01").withColumn("value", F.lit(9.0))
-    write_day_partitioned(upd, path, file_format="orc")
-    back = read_day_partitioned(spark, path, file_format="orc")
-    assert back.count() == 2
-    assert back.filter(F.col("day") == "2024-01-01").collect()[0]["value"] == 9.0
-
-
 def test_driver_window_covers_contract_core():
     """The driver's correctness check hashes only the FIRST 50 entries
     of queries() in iteration order, and the window rotates per round

@@ -58,7 +58,7 @@ QUERIES = {
         FROM events_sf1 GROUP BY user_id, event_type""",
     # --- round-2 additions: the remaining r1-`weak` shapes ---------------
     # enrich join: big fact ⋈ per-key dim derived from itself (the
-    # changes⋈base shape of q13/q24 at fact scale)
+    # changes⋈base shape of q13 at fact scale)
     "join_enrich": """
         SELECT e.user_id, e.event_id, d.first_ts
         FROM events_sf1 e

@@ -131,7 +131,7 @@ def main() -> int:
         mode = ("full-lineage mode: every UNPINNED mid-plan "
                 "localCheckpoint disabled via SPARK_GRAFT_NO_MATERIALIZE, "
                 "so queries that materialize (stable_sort / materialize() "
-                "call sites — x43, x76, x80–x82, q24, …) are audited "
+                "call sites — x43, x76, x80–x82, …) are audited "
                 "across their ENTIRE plan, not just the post-checkpoint "
                 "suffix; pinned sites (x59/x82 loop round state, x44's "
                 "nondeterministic-probe pin) stay active, so those three "
