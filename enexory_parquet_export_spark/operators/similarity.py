@@ -57,32 +57,12 @@ def _ordered_pair_dots(Q, M, np, *, tile: int = _DOT_TILE):
     return dots
 
 
-def _dot(a, b, dim: int = DIM):
-    # reduce keeps the addition left-associative → same rounding as a
-    # strict fold; element_at is 1-based like DuckDB lists
-    return reduce(operator.add,
-                  (F.element_at(a, i) * F.element_at(b, i)
-                   for i in range(1, dim + 1)))
-
-
-def _norm(v, dim: int = DIM):
-    return F.sqrt(reduce(operator.add,
-                         (F.element_at(v, i) * F.element_at(v, i)
-                          for i in range(1, dim + 1))))
-
-
 def _dot_lit(plane: list, v, dim: int = DIM):
     """Dot of a Python literal coefficient vector with an array column
     — constant multipliers fold straight into codegen."""
     return reduce(operator.add,
                   (F.lit(plane[i]) * F.element_at(v, i + 1)
                    for i in range(dim)))
-
-
-def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    v = F.col(vec_col).cast("array<double>")
-    return emb.select("vec_id", "label", v.alias("v")) \
-              .withColumn("nrm", _norm(F.col("v")))
 
 
 def _topk_kernel(k: int):
@@ -93,9 +73,9 @@ def _topk_kernel(k: int):
     i = 1..dim), i.e. the same IEEE operation order as a scalar left
     fold, so cos values are bit-identical to DuckDB's
     ``list_dot_product`` (a BLAS matmul's pairwise/SIMD summation
-    would not be).  The flat-expression JVM formulation (:func:`_dot`
-    per joined pair) measured ~6× slower: 128 ``element_at`` calls
-    per pair defeat JIT vectorization.
+    would not be).  The flat-expression JVM formulation (a sum of
+    ``element_at`` products per joined pair) measured ~6× slower: 128
+    ``element_at`` calls per pair defeat JIT vectorization.
 
     CLASS COLLAPSE (r10, the x32 trick applied to vectors): rows with
     bit-identical vectors share every pair score — cos(q, x) is the

@@ -1,14 +1,2 @@
-"""Sources & sinks: parquet fixtures, JDBC, CSV/JSON-lines, and the
-day-partitioned / compacted / clustered / bucketed parquet writers."""
-from .tables import (  # noqa: F401
-    CANONICAL_TABLES,
-    load_table,
-    read_source_jdbc,
-    register_views,
-)
-from .writer import (  # noqa: F401
-    compact_days,
-    remove_empty_days,
-    write_clustered,
-    write_day_partitioned,
-)
+"""Sources & sinks: parquet fixtures, JDBC, and the day-partitioned
+parquet writer."""

@@ -24,11 +24,6 @@ from pyspark.sql.types import LongType
 
 from ..session import configure
 
-CANONICAL_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 
 @functools.lru_cache(maxsize=256)
 def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
@@ -92,13 +87,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                                F.col(field.name).cast("timestamp"))
     _TABLE_MEMO[key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   tables: tuple[str, ...] = CANONICAL_TABLES) -> None:
-    """Register every canonical table as a temp view for spark.sql."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # --------------------------------------------------------------------------

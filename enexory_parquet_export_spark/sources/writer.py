@@ -117,33 +117,6 @@ def read_day_partitioned(spark: SparkSession, path: str, *,
     return df.withColumn("day", F.col("day").cast("string"))
 
 
-def write_clustered(df: DataFrame, path: str, cluster_cols: list[str], *,
-                    n_files: int | None = None,
-                    mode: str = "overwrite") -> None:
-    """Range-cluster ``df`` on ``cluster_cols`` so parquet min/max
-    footer statistics prune scans.
-
-    ``repartitionByRange`` gives each output file a disjoint key range
-    and ``sortWithinPartitions`` tightens every row group's min/max to
-    a narrow slice — a point or range predicate on the cluster key
-    then skips whole files (and row groups within them) from the
-    footer alone, before any data IO.  At 100 TB this is the
-    difference between a key lookup scanning the table and scanning
-    one file; it is the flat-file analog of the reference's
-    one-day-per-file layout (db_extractor.py:211), generalized to any
-    key.  Cost: one range shuffle (sampling pass + exchange) at write
-    time — paid once, saved on every subsequent selective read.
-    """
-    part = (df.repartitionByRange(n_files, *cluster_cols)
-            if n_files is not None else df.repartitionByRange(*cluster_cols))
-    (part.sortWithinPartitions(*cluster_cols)
-         .write.mode(mode).parquet(path))
-
-
-#: production parquet sweet spot; tests pass something tiny
-DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
-
-
 def day_files(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
     """``{day: {file_name: length}}`` of each day's data files — pure
     file-listing metadata, on the driver."""
@@ -160,113 +133,6 @@ def day_files(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
             for f in fs.listStatus(status.getPath())
             if f.isFile() and not f.getPath().getName().startswith(("_", "."))}
     return out
-
-
-def day_file_stats(spark: SparkSession, path: str) -> dict[str, tuple[int, int]]:
-    """``{day: (n_files, total_bytes)}`` — pure file-listing metadata."""
-    return {day: (len(files), sum(files.values()))
-            for day, files in day_files(spark, path).items()}
-
-
-def compact_days(spark: SparkSession, path: str, *,
-                 target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-                 days: list[str] | None = None) -> dict[str, int]:
-    """Rewrite fragmented day-partitions to ≈``target_file_bytes`` files.
-
-    Long-running CDC merges leave each hot day with one small file per
-    merge batch; at 100 TB the resulting listing/open overhead (and
-    scan tasks per file) dominates read cost.  This is the maintenance
-    twin of the reference's one-file-per-day invariant
-    (Parquet Export/db_extractor.py:211) expressed as an explicit,
-    idempotent operator: per fragmented day, read → ``repartition(n)``
-    with n = ceil(bytes/target) → dynamic-overwrite THAT partition
-    only.  Days already at their target count are skipped without
-    reading data (``day_file_stats`` is listing-only), so the cost is
-    proportional to fragmentation, not table size.
-
-    Returns ``{day: new_file_count}`` for the rewritten days.
-    """
-    stats = day_file_stats(spark, path)
-    rewritten: dict[str, int] = {}
-    todo = []
-    for day, (n_files, total) in sorted(stats.items()):
-        if days is not None and day not in days:
-            continue
-        want = max(1, -(-total // target_file_bytes))
-        if n_files > want:
-            todo.append((day, want))
-    if not todo:
-        return rewritten
-    df = read_day_partitioned(spark, path)
-    for day, want in todo:
-        (df.filter(F.col("day") == day)   # partition-pruned scan
-           .repartition(want)
-           .write.mode("overwrite").partitionBy("day").parquet(path))
-        rewritten[day] = want
-    return rewritten
-
-
-def zorder_key(cols: list, bits: int = 16):
-    """Morton (Z-order) interleave of ``cols`` as one BIGINT sort key.
-
-    Each column must already be a non-negative integer rank in
-    ``[0, 2^bits)`` (use ``ntile``/width bucketing or a rank window to
-    get one); the key interleaves their bits so that sorting by it
-    keeps EVERY input dimension locally clustered — per-file min/max
-    footer ranges stay narrow on all dimensions at once, where a
-    lexicographic sort only tightens the leading column.  Pure
-    shift/or expression tree: stays in whole-stage codegen, no UDF.
-
-    This is the standard multi-dimensional data-skipping layout
-    (Morton curves; the technique behind OPTIMIZE ZORDER in
-    lakehouse table formats), applied to plain parquet.
-
-    ``len(cols) * bits`` must fit below the BIGINT sign bit (≤ 63):
-    a top bit at position 63 would make half the keys negative and
-    sort BEFORE all positive ones, silently destroying the clustering
-    (ADVICE r2).  Each column is masked to ``bits`` wide so an
-    out-of-range rank corrupts only its own key, never a neighbor's
-    interleave lanes.
-    """
-    from functools import reduce
-    from operator import add
-
-    from pyspark.sql import functions as F
-
-    n = len(cols)
-    if n * bits > 63:
-        raise ValueError(
-            f"zorder_key: {n} cols × {bits} bits = {n * bits} bits "
-            f"overflows the BIGINT sign bit (max 63); lower bits to "
-            f"{63 // n} or rank fewer columns")
-    terms = []
-    for b in range(bits):
-        for i, c in enumerate(cols):
-            # bit b of col i lands at interleaved position b*n + i;
-            # the mask clamps ranks outside [0, 2^bits) to their low
-            # `bits` bits instead of bleeding into other lanes
-            col = F.col(c) if isinstance(c, str) else c
-            masked = col.cast("bigint").bitwiseAND(F.lit((1 << bits) - 1))
-            bit = F.shiftright(masked, b).bitwiseAND(F.lit(1))
-            terms.append(F.shiftleft(bit, b * n + i))
-    return reduce(add, terms)
-
-
-def write_zordered(df: DataFrame, path: str, rank_cols: list[str], *,
-                   bits: int = 16, n_files: int | None = None,
-                   mode: str = "overwrite") -> None:
-    """Cluster ``df`` on the Z-order interleave of ``rank_cols``
-    (each pre-ranked to ``[0, 2^bits)``): one range shuffle on the
-    Morton key, then a within-partition sort — every dimension's
-    footer min/max stays narrow, so selective predicates on ANY of
-    the clustered columns prune files, not just the leading one.
-    """
-    z = zorder_key(list(rank_cols), bits).alias("_z")
-    part = df.withColumn("_z", z)
-    part = (part.repartitionByRange(n_files, "_z")
-            if n_files is not None else part.repartitionByRange("_z"))
-    (part.sortWithinPartitions("_z").drop("_z")
-         .write.mode(mode).parquet(path))
 
 
 def write_reference_layout(df: DataFrame, path: str) -> list[str]:

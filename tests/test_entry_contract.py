@@ -150,6 +150,33 @@ def test_day_partitioned_write_returns_days_written(spark, tmp_path):
     assert sorted(map(tuple, read_day_partitioned(spark, path).collect())) == before
 
 
+def test_day_partition_pruning_scans_only_filtered_day(spark, tmp_path):
+    """A day-filter on the mirror must prune at the FILE level: the
+    scan's inputFiles() may only touch the selected day's directory —
+    this is the property that makes the reference's day-walking loop
+    (db_extractor.py:209) a metadata no-op here instead of a data scan.
+    """
+    from enexory_parquet_export_spark.sources.writer import (
+        read_day_partitioned,
+        write_day_partitioned,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"2024-01-{1 + i % 3:02d}", float(i)) for i in range(300)],
+        "pk bigint, day string, value double")
+    path = str(tmp_path / "mirror")
+    write_day_partitioned(df, path)
+
+    scan = read_day_partitioned(spark, path).filter(F.col("day") == "2024-01-02")
+    # inputFiles() lists the relation pre-pruning; the proof lives in
+    # the physical scan node's PartitionFilters
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan, plan
+    pf = plan.split("PartitionFilters")[1].split("]")[0]
+    assert "2024-01-02" in pf, pf
+    assert scan.count() == 100
+
+
 def test_driver_window_covers_contract_core():
     """The driver's correctness check hashes only the FIRST 50 entries
     of queries() in iteration order, and the window rotates per round

@@ -334,40 +334,6 @@ def test_decode_seam_decoder_errors_surface(spark):
                            decoder=_make_bmp_decoder(M.FEATURE_DIM)).collect()
 
 
-class TestMaintenance:
-    def test_sync_fragment_compact_audit(self, spark, tmp_path):
-        """Full maintenance cycle: repeated incremental syncs fragment
-        the hot day; compaction rewrites only fragmented days; the
-        integrity audit still reconciles afterwards."""
-        from enexory_parquet_export_spark.sources.writer import (
-            compact_days,
-            day_file_stats,
-        )
-
-        mirror = str(tmp_path / "mm")
-        rows = list(ROWS_V1)
-        P.run_sync(spark, src(spark, rows), mirror)
-        # three more syncs, each appending a late row to the newest day
-        # (the reference's refetch-latest-day shape) — refetch rewrites
-        # the whole day, so fragment it explicitly the way concurrent
-        # writers would: direct appends of small slices
-        extra = [(10 + i, f"2010-01-06 2{i}:00:00", float(i),
-                  f"2010-01-06 2{i}:30:00") for i in range(3)]
-        for i, r in enumerate(extra):
-            (P.normalize(P.validate(src(spark, [r])))
-             .write.mode("append").partitionBy("day").parquet(mirror))
-            rows.append(r)
-
-        frag = day_file_stats(spark, mirror)["2010-01-06"][0]
-        assert frag > 1
-        done = compact_days(spark, mirror, target_file_bytes=1 << 30)
-        assert "2010-01-06" in done
-        assert day_file_stats(spark, mirror)["2010-01-06"][0] == 1
-
-        report = P.row_integrity(spark, src(spark, rows), mirror)
-        assert report.matches and report.difference == 0
-
-
 def test_resize_media_stub_and_seam(spark, sf_dir):
     """Stub resize: typed dims + w*h payload bytes; the resizer seam
     accepts a real callable (here: a center-crop-ish truncation) and
