@@ -1,4 +1,2 @@
-from .datetime import (  # noqa: F401
-    SENTINEL_DT, DT_PATTERN, normalize_datetime, day_key, utc2_render,
-)
-from .hashing import portable_hash60  # noqa: F401
+"""Column functions: datetime normalization, portable hashing and text
+normalization."""

@@ -13,12 +13,12 @@ LAST assignment of each ``@k`` wins (an UPDATE's WHERE row-image is
 followed by its SET row-image, so new values override old).
 
 Spark restatement: the sequential state machine becomes relational.
-Each input row is (file, line_no, line); blocks are recovered with a
-running count of header lines per file (one window, partitioned by
-binlog file — the unit the reference also processes sequentially,
-parse_binlogs.sh:118 — so parallelism is per-file, matching the data's
-inherent ordering scope), and each block collapses in ONE hash
-aggregation using ``max_by(value, line_no)`` per ``@k`` slot.
+Each input row is (file, file_mtime, line_no, line); blocks are
+recovered with a running count of header lines per file (one window,
+partitioned by binlog file — the unit the reference also processes
+sequentially, parse_binlogs.sh:118 — so parallelism is per-file,
+matching the data's inherent ordering scope), and each block collapses
+in ONE hash aggregation using ``max_by(value, line_no)`` per ``@k`` slot.
 """
 
 from __future__ import annotations
@@ -36,6 +36,10 @@ _HEADERS = {
     f"DELETE FROM {TABLE_LIT}": "D",
 }
 
+#: :func:`assign_global_seq`'s per-segment seq range: 2^40 (~1.1e12
+#: lines per segment, ~8.4e6 segments in a BIGINT)
+SEQ_STRIDE = 1 << 40
+
 
 def _header_op(t):
     expr = None
@@ -48,19 +52,18 @@ def _header_op(t):
 def parse_binlog_text(lines: DataFrame) -> DataFrame:
     """Raw pseudo-SQL lines → typed changelog rows.
 
-    Input: ``file, line_no, line`` (and optionally ``file_mtime``), one
-    row per text line, ``line_no`` increasing within the file.
-    Output: ``file, seq, pk, op, date_time, value, ts_epoch, day`` —
+    Input: ``file, file_mtime, line_no, line``, one row per text line,
+    ``line_no`` increasing within the file.
+    Output: ``file, seq, pk, op, date_time, value, ts_epoch, day,
+    file_mtime`` —
     ``seq`` is the block's first line number (monotone within a file,
     the binlog-position analog); blocks whose pk parse fails are
     dropped exactly as the reference's ``pk != 0`` flush guard does
     (consolidate.cpp:303-316).
     """
     t = F.trim(F.col("line"))
-    has_mtime = "file_mtime" in lines.columns
-    extra = [F.col("file_mtime")] if has_mtime else []
-    base = (lines.select("file", F.col("line_no").alias("_ln"), t.alias("_t"),
-                         *extra)
+    base = (lines.select("file", "file_mtime", F.col("line_no").alias("_ln"),
+                         t.alias("_t"))
                  .filter(F.col("_t") != ""))
     op = _header_op(F.col("_t"))
     # assignment rows: @k = <value> — split at the FIRST '=' with
@@ -92,7 +95,7 @@ def parse_binlog_text(lines: DataFrame) -> DataFrame:
         return F.max_by(F.when(cond, F.col("_v")),
                         F.when(cond, F.col("_ln")))
 
-    agg = (blocks.groupBy("file", "_blk", *(["file_mtime"] if has_mtime else []))
+    agg = (blocks.groupBy("file", "_blk", "file_mtime")
            .agg(F.min("_ln").alias("seq"),
                 F.max_by(F.col("_hdr_op"),
                          F.when(F.col("_hdr_op").isNotNull(),
@@ -119,7 +122,7 @@ def parse_binlog_text(lines: DataFrame) -> DataFrame:
     return (agg.select("file", "seq", pk.alias("pk"), "op",
                        dt.alias("date_time"), value.alias("value"),
                        ts.alias("ts_epoch"),
-                       F.substring(dt, 1, 10).alias("day"), *extra)
+                       F.substring(dt, 1, 10).alias("day"), "file_mtime")
                .filter(F.col("pk") != 0))
 
 
@@ -209,10 +212,9 @@ def roundtrip_changelog_identity(changelog: DataFrame) -> DataFrame:
             .filter(F.col("pk") != 0))
 
 
-def assign_global_seq(changelog: DataFrame, *,
-                      stride: int = 1 << 40) -> DataFrame:
+def assign_global_seq(changelog: DataFrame) -> DataFrame:
     """Rebase per-file ``seq`` onto ONE global order across rotated
-    segments: ``seq' = file_rank * stride + seq``.
+    segments: ``seq' = file_rank * SEQ_STRIDE + seq``.
 
     The reference applies segments strictly sequentially in index order
     (parse_binlogs.sh:118,146-151: ``for f in $(ls … | sort)``), and
@@ -231,8 +233,8 @@ def assign_global_seq(changelog: DataFrame, *,
     the numeric-suffix order.  So rank by the numeric suffix FIRST
     (numeric compare survives MySQL's index widening at
     999999→1000000 where lexical order breaks), then by ``file_mtime``
-    when the changelog carries it (``read_binlog_dir`` / the text
-    stream attach it from ``_metadata``) — the tiebreak for
+    (``read_binlog_dir`` / the text stream attach it from
+    ``_metadata``) — the tiebreak for
     UUID-named part files with no numeric suffix, and robust to
     rsync/copy without timestamp preservation perturbing mtimes of
     numbered segments — then the name itself.  The rank is computed with one
@@ -241,25 +243,20 @@ def assign_global_seq(changelog: DataFrame, *,
     changelog; the data itself is never shuffled and nothing is
     collected to the driver.
 
-    ``stride`` must exceed any within-file seq; 2^40 (~1.1e12 lines per
-    segment, ~8.4e6 segments in a BIGINT) is far beyond any real
-    mysqlbinlog output, and a violating row raises rather than silently
-    mis-ordering.
+    ``SEQ_STRIDE`` must exceed any within-file seq; 2^40 is far beyond
+    any real mysqlbinlog output, and a violating row raises rather than
+    silently mis-ordering.
     """
     sfx = F.regexp_extract("file", r"(\d+)$", 1)
+    # mtime is a TIEBREAK after the numeric suffix (index order), never
+    # the primary key: copied/rsynced segments without timestamp
+    # preservation must not reorder numbered segments
     order_keys = [F.when(sfx != "", sfx.cast("bigint")).asc_nulls_last(),
-                  F.col("file")]
-    file_cols = ["file"]
-    if "file_mtime" in changelog.columns:
-        # mtime is a TIEBREAK after the numeric suffix (index order),
-        # never the primary key: copied/rsynced segments without
-        # timestamp preservation must not reorder numbered segments
-        order_keys.insert(1, F.col("file_mtime").asc_nulls_last())
-        file_cols.append("file_mtime")
+                  F.col("file_mtime").asc_nulls_last(), F.col("file")]
     from ..session import guarded_window
 
     rank_w = Window.orderBy(*order_keys)
-    files = (changelog.select(*file_cols).distinct()
+    files = (changelog.select("file", "file_mtime").distinct()
              .withColumn("_frank",
                          guarded_window(
                              F.row_number().over(rank_w), rank_w,
@@ -268,40 +265,25 @@ def assign_global_seq(changelog: DataFrame, *,
              .select("file", "_frank"))
     cols = [c for c in changelog.columns if c != "file_mtime"]
     checked_seq = F.when(
-        (F.col("seq") >= 0) & (F.col("seq") < F.lit(stride)), F.col("seq"),
+        (F.col("seq") >= 0) & (F.col("seq") < F.lit(SEQ_STRIDE)),
+        F.col("seq"),
     ).otherwise(F.raise_error(F.concat(
-        F.lit(f"assign_global_seq: per-file seq out of [0, {stride}): "),
+        F.lit(f"assign_global_seq: per-file seq out of [0, {SEQ_STRIDE}): "),
         F.col("seq").cast("string"))))
     return (changelog.join(F.broadcast(files), "file")
             .withColumn("seq",
-                        F.col("_frank") * F.lit(stride) + checked_seq)
+                        F.col("_frank") * F.lit(SEQ_STRIDE) + checked_seq)
             .select(*cols))
 
 
-def render_binlog_text(changelog: DataFrame, *,
-                       file_name: str = "mysql-bin.000001",
-                       seqs_per_file: int | None = None) -> DataFrame:
+def render_binlog_text(changelog: DataFrame) -> DataFrame:
     """Inverse of :func:`parse_binlog_text` for fixtures/round-trip
-    tests: a typed changelog rendered as mysqlbinlog-style pseudo-SQL.
+    tests: a typed changelog rendered as mysqlbinlog-style pseudo-SQL,
+    one segment ``mysql-bin.000001`` with a NULL ``file_mtime`` (the
+    columns :func:`read_binlog_dir` yields).
 
     UPDATE blocks emit a WHERE row-image with perturbed old values
     before the SET row-image, exercising the last-assignment-wins rule.
-
-    ``seqs_per_file`` buckets blocks into rotated binlog segments
-    (``mysql-bin.<seq div N>``) — blocks never span files, so the
-    parser's per-file window parallelizes across segments exactly as
-    real binlog rotation would allow.  In that mode the changelog is
-    hash-repartitioned by the segment name BEFORE the explode, at an
-    EXPLICIT partition count (the session's shuffle parallelism): the
-    pre-explode relation is ~12× smaller in rows than the exploded
-    output, so AQE — which only sees the pre-explode shuffle bytes —
-    would coalesce it toward one partition and serialize the explode,
-    the parse window, and the block aggregation in a single task
-    (measured 2.5 s vs 1.4 s at sf0.1).  Pinning the count keeps the
-    explode spread, and because the repartition key is the very column
-    the parser windows on, the downstream ``Window.partitionBy(file)``
-    needs no further Exchange (the hash distribution is already
-    satisfied — one mid-plan shuffle total).
     """
     hdr = F.when(F.col("op") == "I", F.lit(f"INSERT INTO {TABLE_LIT}")) \
            .when(F.col("op") == "U", F.lit(f"UPDATE {TABLE_LIT}")) \
@@ -331,25 +313,10 @@ def render_binlog_text(changelog: DataFrame, *,
              .when(F.col("op") == "I",
                    F.concat(F.array(hdr, F.lit("SET")), img))
              .otherwise(F.concat(F.array(hdr, F.lit("WHERE")), img)))
-    if seqs_per_file is not None:
-        file_expr = F.concat(
-            F.lit("mysql-bin."),
-            F.lpad(F.floor(F.col("seq") / seqs_per_file).cast("string"),
-                   6, "0"))
-        n_parts = int(changelog.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "200"))
-        return (changelog
-                .select(F.col("seq"), file_expr.alias("file"),
-                        body.alias("_body"))
-                .repartition(n_parts, F.col("file"))
-                .select("file", F.col("seq"),
-                        F.posexplode(F.col("_body")).alias("_o", "line"))
-                .select("file",
-                        (F.col("seq") * 1000 + F.col("_o")).alias("line_no"),
-                        "line"))
     return (changelog
             .select(F.col("seq"), F.posexplode(body).alias("_o", "line"))
-            .select(F.lit(file_name).alias("file"),
+            .select(F.lit("mysql-bin.000001").alias("file"),
+                    F.lit(None).cast("timestamp").alias("file_mtime"),
                     (F.col("seq") * 1000 + F.col("_o")).alias("line_no"),
                     "line"))
 

@@ -4,40 +4,16 @@ The alpha-mixing recipe (sample each source proportional to n^alpha —
 GPT-3 / XLM-R style) ends in a per-source QUOTA SELECTION: take the
 ``quota_s`` documents of source *s* that sort first in a deterministic
 uniform hash order.  x106 (``queries_ext``) declares the exact form;
-this module holds the selection step as a standalone operator with the
-two execution modes a 100 TB mix job needs:
+this module holds the selection step as a standalone operator:
+``row_number`` over ``(portable_hash, key)`` per source, keep
+``rn <= quota``.
 
-- ``mode="exact"``: the declared semantics — ``row_number`` over
-  ``(portable_hash, key)`` per source, keep ``rn <= quota``.  One
-  corpus exchange partitioned by source; at cluster scale a hot
-  source (they are Zipf — one source is often half the corpus) becomes
-  ONE window partition with no skew remedy, which is why this mode is
-  for oracle parity and modest alphabets, not the 100 TB path.
-- ``mode="threshold"``: the sampled hash-threshold cut the x106
-  docstring promised — per source, estimate the ``quota/n`` quantile
-  of the hash with ONE ``percentile_approx`` sketch aggregation over a
-  fixed quantile grid (sketches partial-aggregate map-side, so a hot
-  source spreads across tasks like any hash agg), then keep
-  ``hash <= threshold`` in a map-side filter.  No corpus window, no
-  corpus-row exchange, skew-immune; the selected count is approximate
-  within grid resolution (1/``grid``) + sketch error (n/``accuracy``)
-  per source, which is the standard trade for hash-cut sampling at
-  scale (the mix ratio tolerance of a training run is far looser).
-
-Both modes select by the SAME hash order, so the threshold selection
-converges on the exact selection as accuracy grows — pinned by
-``tests/test_mixing.py``.
-
-Measured at 1.5M docs / 20 sources (local[32]): threshold error
-≤ 213 ppm of quota per source; wall exact 1.0 s vs threshold 1.9 s
-(and 2.0 vs 2.3 s when ALL rows are one source) — locally the
-single-task sort of even a corpus-sized window partition is cheap, so
-threshold mode is NOT a local win; its value is the bound it removes:
-exact mode's per-task memory/time grows linearly with the hottest
-source (a 10⁹-row source is one task), threshold mode's stays
-O(rows/partition) with a sketch whose state is O(grid·accuracy)
-regardless of skew.  Choose exact for oracle parity and modest
-sources, threshold for corpora whose largest source dwarfs a task.
+One corpus exchange partitioned by source.  At cluster scale a hot
+source (they are Zipf — one source is often half the corpus) becomes
+ONE window partition with no skew remedy: its per-task memory and time
+grow linearly with the hottest source.  Locally the single-task sort
+of even a corpus-sized window partition is cheap (1.5M docs /
+20 sources: 1.0 s on local[32], 2.0 s when all rows are one source).
 """
 
 from __future__ import annotations
@@ -51,50 +27,19 @@ __all__ = ["quota_select"]
 
 
 def quota_select(docs: DataFrame, quota: DataFrame, *,
-                 key_col: str = "doc_id", source_col: str = "source",
-                 mode: str = "exact", grid: int = 1000,
-                 accuracy: int = 10_000) -> DataFrame:
+                 key_col: str = "doc_id",
+                 source_col: str = "source") -> DataFrame:
     """Rows of ``docs`` selected per-source by deterministic hash order.
 
     ``quota`` carries one row per source: ``(source_col, n, quota)``
     with ``n`` the source's doc count (the x106 apportionment output).
     Returns the selected ``docs`` rows joined with the quota columns;
-    a source receives ``min(quota, n)`` rows in exact mode and
-    approximately that in threshold mode (never any rows when its
-    quota is 0).
+    a source receives ``min(quota, n)`` rows.
     """
-    if mode not in ("exact", "threshold"):
-        raise ValueError(f"quota_select: unknown mode {mode!r}")
     h = portable_hash60(F.col(key_col).cast("string"))
     joined = (docs.join(F.broadcast(quota), source_col)
                   .withColumn("_h", h))
-    if mode == "exact":
-        w = Window.partitionBy(source_col).orderBy("_h", key_col)
-        return (joined.withColumn("_rn", F.row_number().over(w))
-                      .filter(F.col("_rn") <= F.col("quota"))
-                      .drop("_rn", "_h"))
-    # threshold: percentile_approx needs CONSTANT percentages, so the
-    # sketch evaluates a fixed grid of grid+1 quantiles per source and
-    # each source picks its own cell by quota/n.  The grid array is
-    # alphabet-sized × grid — the mixture config, not corpus data.
-    # one py4j call (SQL array literal, D-suffixed doubles — bare
-    # decimals would parse as DECIMAL), not grid+1 F.lit roundtrips:
-    # the x37 lesson — starred literal arrays bill ~1 ms per element
-    # of client-side plan construction on every fresh build.  repr()
-    # round-trips each IEEE double exactly.
-    pcts = F.expr("array(" + ",".join(f"{i / grid!r}D"
-                                      for i in range(grid + 1)) + ")")
-    thr = (joined.groupBy(source_col)
-                 .agg(F.percentile_approx("_h", pcts, F.lit(accuracy))
-                       .alias("_qs"),
-                      F.max("quota").alias("_q"), F.max("n").alias("_n")))
-    # cell index: floor(min(quota/n, 1) * grid) + 1 (1-based element_at);
-    # under-selects by at most one grid cell, never past the quota cell
-    idx = (F.least(F.col("_q") * grid / F.col("_n"), F.lit(grid))
-            .cast("int") + 1)
-    thr = thr.select(source_col, F.element_at("_qs", idx).alias("_thr"),
-                     F.col("_q").alias("_quota0"))
-    return (joined.join(F.broadcast(thr), source_col)
-                  .filter((F.col("_quota0") > 0)
-                          & (F.col("_h") <= F.col("_thr")))
-                  .drop("_h", "_thr", "_quota0"))
+    w = Window.partitionBy(source_col).orderBy("_h", key_col)
+    return (joined.withColumn("_rn", F.row_number().over(w))
+                  .filter(F.col("_rn") <= F.col("quota"))
+                  .drop("_rn", "_h"))

@@ -12,10 +12,12 @@ instead of per-file rewrites.
 
 ``source`` is any DataFrame with the canonical 4 columns (id,
 date_time, value, ts) — in production
-:func:`..sources.tables.read_source_jdbc` (per-day predicate
-partitioning + ``fetchsize``, the exact analog of the reference's
-1M-row chunked day loop, db_extractor.py:13,225-230); in this offline
-harness, a parquet snapshot.
+:func:`..sources.tables.read_source_jdbc` (one JDBC partition read at
+``fetchsize`` rows per fetch, the analog of the reference's 1M-row
+chunks, db_extractor.py:13; :func:`incremental_sync`'s
+``date_time >= resume`` filter is pushed into its query, like the
+reference's ranged query, :225-230); in this offline harness, a
+parquet snapshot.
 """
 
 from __future__ import annotations

@@ -28,7 +28,6 @@ from .functions import text as T
 from .functions.hashing import MERSENNE_P, hash_family_sql, portable_hash60_sql
 from .operators import cdc
 from .operators import dedup as D
-from .operators.binlog import parse_binlog_text, render_binlog_text
 from .operators.similarity import ann_lsh_topk, ivf_flat_topk, lsh_planes
 from .queries import CHANGELOG_CTE, bounded_sort, stable_sort, tiny_sort
 from .sources.tables import load_table
@@ -3505,80 +3504,13 @@ sym{i} AS (
     return "WITH " + ",\n".join(parts) + "\n" + tail
 
 
-def _bpe_local_merges(word_counts: dict[str, int], iters: int):
-    """Driver-side Sennrich merge loop with incremental pair-stats
-    maintenance — the scale path for realistic merge counts.
-
-    Semantics are EXACTLY the pinned pure-Python reference
-    (tests/test_edge_fixtures.py::_bpe_reference): positional
-    overlapping pair counts, argmax ties broken lexicographically,
-    greedy left-to-right non-overlapping replacement.  The difference
-    is cost: instead of recounting every pair of every word per merge
-    (O(vocab × iters)), stats are updated by exact delta — only words
-    actually containing the merged pair are rewritten, and each
-    rewrite subtracts its old adjacencies and adds its new ones.  At
-    a tokenizer's 30k merges over a Zipf vocabulary this is the only
-    formulation that terminates; it is also what Sennrich's own
-    learn_bpe does.
-
-    Returns ``(merges, vocab)``: the merge list ``[(a, b, n), ...]``
-    and the final per-word symbol lists ``{word: [sym, ...]}``.
-    """
-    vocab = {w: list(w) for w in word_counts if w}
-    stats: dict[tuple[str, str], int] = {}
-    where: dict[tuple[str, str], set[str]] = {}
-    for w, syms in vocab.items():
-        c = word_counts[w]
-        for pair in zip(syms, syms[1:]):
-            stats[pair] = stats.get(pair, 0) + c
-            where.setdefault(pair, set()).add(w)
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(iters):
-        if not stats:
-            break
-        (a, b), n = min(stats.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((a, b, n))
-        new = a + b
-        # `where` entries can be stale (a word rewritten by a later
-        # merge no longer contains the pair) — the rewrite below
-        # re-checks actual symbols, so stale ids cost one scan, never
-        # a wrong count.  stats is exact: ±cnt per adjacency delta,
-        # keys deleted at zero so the argmax never sees ghost pairs.
-        for w in list(where.get((a, b), ())):
-            syms = vocab[w]
-            c = word_counts[w]
-            out, i, changed = [], 0, False
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(new)
-                    i += 2
-                    changed = True
-                else:
-                    out.append(syms[i])
-                    i += 1
-            if not changed:
-                continue
-            for pair in zip(syms, syms[1:]):
-                left = stats[pair] - c
-                if left:
-                    stats[pair] = left
-                else:
-                    del stats[pair]
-                    where.pop(pair, None)
-            for pair in zip(out, out[1:]):
-                stats[pair] = stats.get(pair, 0) + c
-                where.setdefault(pair, set()).add(w)
-            vocab[w] = out
-    return merges, vocab
-
-
 # Session-scoped BPE artifact cache (r9 VERDICT #2): x95, x96 and x99
 # each rebuilt the same merge state from scratch per fresh plan —
 # ~9 s of the 66 s steady bench set was one recomputed artifact.  A
 # trained tokenizer IS a session-resident artifact (a real pipeline
 # trains once and applies everywhere), so `bpe_merges(cache_key=...)`
 # memoizes the two derived relations per (applicationId, cache_key,
-# iters, mode): the merge table as collected rows (≤ iters rows) and
+# iters): the merge table as collected rows (≤ iters rows) and
 # the post-merge symbol relation as a persisted DataFrame
 # (vocabulary-sized — Heaps-bounded, never corpus-sized, the same
 # boundedness argument as the IVF codebook).  The first builder still
@@ -3593,7 +3525,6 @@ _BPE_ARTIFACTS: dict[tuple, object] = _artifacts.register(
 
 def bpe_merges(wc: DataFrame, *, iters: int = _BPE_ITERS,
                return_symbols: bool = False,
-               mode: str = "spark",
                cache_key: str | None = None) -> DataFrame:
     """x95 core on any ``(word, cnt)`` relation (the crossover
     harness runs it on scaled vocabularies).  With
@@ -3604,31 +3535,19 @@ def bpe_merges(wc: DataFrame, *, iters: int = _BPE_ITERS,
     session-scoped artifact cache above; the caller owns key
     correctness (same key ⇒ same wc relation).
 
-    ``mode="spark"`` (default, the declared x95/x96 form) runs the
-    merge loop as Spark jobs — one argmax round per merge, fine at
-    the oracle gate's 3 rounds, impossible at a real tokenizer's 30k
-    (each merge is a sequentially-dependent global argmax, i.e. 30k
-    job waves).  ``mode="local"`` is the scale-correct hybrid: the
-    corpus-sized word-count agg stays in Spark (the only pass that
-    touches the corpus), then the merge loop runs in ONE process over
-    the Zipf-bounded ``(word, cnt)`` vocabulary with incremental
-    pair-stats updates (``_bpe_local_merges`` — exactly Sennrich,
-    pinned byte-equal to the spark mode and to the pure reference in
-    tests/test_ml_property.py).  The vocabulary collect is bounded
-    the way the IVF codebook collect is: unique words grow
-    sub-linearly (Heaps' law) and are orders of magnitude smaller
-    than the corpus at any scale — measured: 10M corpus words →
-    66k-row vocab, collected in <1 s where the declarative form
-    cannot run at all past a handful of rounds.
+    The merge loop runs as Spark jobs, one argmax round per merge:
+    fine at the declared 3 rounds, but each merge is a sequentially
+    dependent global argmax, so a real tokenizer's 30k merges would be
+    30k job waves.
     """
     if cache_key is not None:
         spark = wc.sparkSession
         key = (spark.sparkContext.applicationId, cache_key, iters,
-               mode, bool(return_symbols), plan_fingerprint(wc))
+               bool(return_symbols), plan_fingerprint(wc))
         hit = _artifacts.get(_BPE_ARTIFACTS, key)
         if hit is None:
             built = bpe_merges(wc, iters=iters,
-                               return_symbols=return_symbols, mode=mode)
+                               return_symbols=return_symbols)
             if return_symbols:
                 # route through the audited materialization gate
                 # (session.materialize — the persist-guard invariant):
@@ -3652,23 +3571,6 @@ def bpe_merges(wc: DataFrame, *, iters: int = _BPE_ITERS,
         one = spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), schema)
         return tiny_sort(one, "step")
-    if mode == "local":
-        rows = wc.select("word", "cnt").collect()   # Zipf-bounded vocab
-        counts = {r["word"]: r["cnt"] for r in rows}
-        merges, vocab = _bpe_local_merges(counts, iters)
-        spark = wc.sparkSession
-        if return_symbols:
-            sym_rows = [(w, counts[w], p + 1, s)
-                        for w, syms in vocab.items()
-                        for p, s in enumerate(syms)]
-            return spark.createDataFrame(
-                sym_rows, "word string, cnt bigint, p bigint, s string")
-        return spark.createDataFrame(
-            [(i + 1, a, b, n) for i, (a, b, n) in enumerate(merges)],
-            "step bigint, left_sym string, right_sym string,"
-            " pair_count bigint")
-    if mode != "spark":
-        raise ValueError(f"unknown bpe_merges mode: {mode!r}")
     from pyspark.sql import Window
 
     w = Window.partitionBy("word").orderBy("p")
@@ -3995,9 +3897,7 @@ def x98(spark, sf_dir):
 # hash-join against the per-word symbol-count relation + per-doc hash
 # agg — no per-occurrence merge loop, no UDF in the corpus path.  The
 # vocabulary side inherits x95's contract: 3 declared rounds run as one
-# lazy Spark DAG; real merge counts use bpe_merges(mode="local") with
-# the same join-back (symbol counts per word are mode-identical, pinned
-# in tests/test_ml_property.py).  wsym is vocabulary-sized → AQE
+# lazy Spark DAG.  wsym is vocabulary-sized → AQE
 # broadcasts it under the fixture; at 100 TB it stays a shuffle join on
 # `word`, the corpus side's only exchange.
 # --------------------------------------------------------------------------
@@ -4542,12 +4442,8 @@ def x105(spark, sf_dir):
 # Scale: source stats are a hash agg; the apportionment relation is
 # source-alphabet-sized (the mixture config itself — genuinely
 # bounded, broadcast by construction); the only corpus-sized work is
-# one broadcast join + one per-source hash-order row_number.  The
-# cluster-scale path is IMPLEMENTED as operators/mixing.quota_select
-# (mode="threshold"): a percentile_approx sketch cut with no
-# per-source corpus window — same hash order, so it converges on the
-# declared semantics (quota-th smallest hash); pinned by
-# tests/test_mixing.py.
+# one broadcast join + one per-source hash-order row_number
+# (operators/mixing.quota_select).
 # --------------------------------------------------------------------------
 @declared("x106_source_mixing", f"""
 WITH src AS (SELECT source, CAST(count(*) AS BIGINT) AS n
@@ -4608,13 +4504,9 @@ def x106(spark, sf_dir):
                        (F.col("base")
                         + F.when(F.col("r") <= F.col("t") - F.col("sb"), 1)
                            .otherwise(0)).alias("quota")))
-    # selection routes through the quota_select operator (r8): exact
-    # mode here for oracle parity; the 100 TB path is its
-    # mode="threshold" sketch cut (no per-source corpus window) —
-    # identity between the modes is pinned by tests/test_mixing.py
     from .operators.mixing import quota_select
 
-    sel_agg = (quota_select(docs, quota, mode="exact")
+    sel_agg = (quota_select(docs, quota)
                .groupBy("source")
                .agg(F.count("*").cast("bigint").alias("_nsel"),
                     F.sum("doc_id").cast("bigint").alias("_ssum")))

@@ -102,26 +102,6 @@ JDBC_FETCH_SIZE = 1_000_000
 SOURCE_COLS = ("id", "date_time", "value", "ts")
 
 
-def day_window_predicates(dt_col: str, days: list[str]) -> list[str]:
-    """One half-open day-window WHERE clause per day — the reference's
-    day-walking loop (db_extractor.py:302-317, query :225-230) mapped
-    to Spark's ``predicates`` JDBC partitioning: each day becomes one
-    JDBC partition executing the identical server-side ranged query,
-    but all days run in parallel instead of sequentially."""
-    out = []
-    for day in days:
-        nxt = _next_day(day)
-        out.append(f"`{dt_col}` >= '{day} 00:00:00' "
-                   f"AND `{dt_col}` < '{nxt} 00:00:00'")
-    return out
-
-
-def _next_day(day: str) -> str:
-    import datetime
-    d = datetime.date.fromisoformat(day)
-    return (d + datetime.timedelta(days=1)).isoformat()
-
-
 def jdbc_scan_options(url: str, table: str, *,
                       fetchsize: int = JDBC_FETCH_SIZE,
                       driver: str | None = None,
@@ -148,28 +128,18 @@ def jdbc_scan_options(url: str, table: str, *,
 
 
 def read_source_jdbc(spark: SparkSession, url: str, table: str, *,
-                     dt_col: str = "date_time",
-                     days: list[str] | None = None,
                      fetchsize: int = JDBC_FETCH_SIZE,
                      driver: str | None = None) -> DataFrame:
     """Chunked JDBC scan of the source table (O1,
     db_extractor.py:13,198,230): the production entry point that the
     parquet fixture harness stands in for offline.
 
-    With ``days``, each day window becomes one JDBC partition running
-    the reference's exact per-day ranged query server-side — the
-    sequential day loop parallelized.  Without ``days``, a single
-    partition streams the table at ``fetchsize`` rows per fetch (the
-    backfill shape, db_extractor.py:195-216).  Only the canonical four
-    columns are projected, so JDBC column pruning applies.
+    One JDBC partition streams the table at ``fetchsize`` rows per
+    fetch (the backfill shape, db_extractor.py:195-216); the day and
+    resume filters applied downstream are pushed into its query
+    server-side.  Only the canonical four columns are projected, so
+    JDBC column pruning applies.
     """
     opts = jdbc_scan_options(url, table, fetchsize=fetchsize, driver=driver)
-    reader = spark.read.format("jdbc")
-    if days:
-        props = {k: v for k, v in opts.items() if k not in ("url", "dbtable")}
-        df = spark.read.jdbc(url=url, table=table,
-                             predicates=day_window_predicates(dt_col, days),
-                             properties=props)
-    else:
-        df = reader.options(**opts).load()
-    return df.select(*SOURCE_COLS)
+    return (spark.read.format("jdbc").options(**opts).load()
+            .select(*SOURCE_COLS))

@@ -158,7 +158,7 @@ def test_registry_tolerates_out_of_band_clear(spark, clean_registry):
 def test_bpe_family_shares_one_artifact(spark, sf_dir, clean_registry,
                                         capfd):
     """x95→x96→x99 must share ONE trained relation per
-    (mode, return_symbols): zero supersede evictions across the sweep
+    return_symbols value: zero supersede evictions across the sweep
     and x99 consumes the very object x96 pinned (r12 VERDICT #1 — x99
     derived its word counts through a doc_id-carrying projection,
     keyed a different plan fingerprint, and evicted x96's pinned
@@ -168,11 +168,11 @@ def test_bpe_family_shares_one_artifact(spark, sf_dir, clean_registry,
     capfd.readouterr()  # drain earlier output
     QX.x95(spark, sf_dir).collect()
     QX.x96(spark, sf_dir).collect()
-    sym = {k: v for k, v in QX._BPE_ARTIFACTS.items() if k[4] is True}
+    sym = {k: v for k, v in QX._BPE_ARTIFACTS.items() if k[3] is True}
     assert len(sym) == 1, f"expected one symbol artifact, got {list(sym)}"
     pinned = next(iter(sym.values()))
     QX.x99(spark, sf_dir).collect()
-    sym2 = {k: v for k, v in QX._BPE_ARTIFACTS.items() if k[4] is True}
+    sym2 = {k: v for k, v in QX._BPE_ARTIFACTS.items() if k[3] is True}
     assert len(sym2) == 1 and next(iter(sym2.values())) is pinned, \
         "x99 must HIT x96's pinned symbol relation, not rebuild it"
     err = capfd.readouterr().err

@@ -21,8 +21,8 @@ from enexory_parquet_export_spark.sources.tables import load_table
 
 def lines_df(spark, lines):
     return spark.createDataFrame(
-        [("f1", i, ln) for i, ln in enumerate(lines)],
-        "file string, line_no bigint, line string")
+        [("f1", None, i, ln) for i, ln in enumerate(lines)],
+        "file string, file_mtime timestamp, line_no bigint, line string")
 
 
 def parse(spark, lines):
@@ -197,8 +197,7 @@ def test_roundtrip_identity_matches_composition(spark, rows):
     cols = ["seq", "pk", "op", "date_time", "value", "ts_epoch", "day"]
     via_text = sorted(
         tuple(r[c] for c in cols) for r in
-        parse_binlog_text(render_binlog_text(
-            log, seqs_per_file=10)).select(*cols).collect())
+        parse_binlog_text(render_binlog_text(log)).select(*cols).collect())
     collapsed = sorted(
         tuple(r[c] for c in cols) for r in
         roundtrip_changelog_identity(log).select(*cols).collect())
@@ -211,8 +210,8 @@ def test_assign_global_seq_numeric_suffix_rank(spark):
     from enexory_parquet_export_spark.operators.binlog import assign_global_seq
 
     df = spark.createDataFrame(
-        [("mysql-bin.1000000", 2), ("mysql-bin.999999", 5)],
-        "file string, seq bigint")
+        [("mysql-bin.1000000", 2, None), ("mysql-bin.999999", 5, None)],
+        "file string, seq bigint, file_mtime timestamp")
     got = {r["file"]: r["seq"] for r in assign_global_seq(df).collect()}
     assert got["mysql-bin.999999"] == 5                  # rank 0: unchanged
     assert got["mysql-bin.1000000"] == (1 << 40) + 2     # rank 1: rebased
@@ -220,8 +219,9 @@ def test_assign_global_seq_numeric_suffix_rank(spark):
 
 
 def test_assign_global_seq_prefers_mtime(spark):
-    """With a file_mtime column (rotation finalization order), time
-    beats name — part-file names carry random UUIDs."""
+    """Among files without a numeric suffix, file_mtime (rotation
+    finalization order) beats name — part-file names carry random
+    UUIDs."""
     import datetime
 
     from enexory_parquet_export_spark.operators.binlog import assign_global_seq
@@ -258,7 +258,8 @@ def test_cross_segment_last_event_wins(spark):
          ("mysql-bin.000002", 4, "@3='2024-03-01 10:00:00'"),
          ("mysql-bin.000002", 5, "@4=2.0"),
          ("mysql-bin.000002", 6, "@6=200")],
-        "file string, line_no bigint, line string")
+        "file string, line_no bigint, line string",
+    ).withColumn("file_mtime", F.lit(None).cast("timestamp"))
     log = assign_global_seq(parse_binlog_text(lines))
     base = spark.createDataFrame(
         [], "day string, pk bigint, date_time string, value double, "

@@ -351,3 +351,28 @@ def test_declared_query_code_never_persists_directly():
                 if re.search(r"\.(persist|cache)\(", code):
                     hits.append(f"{path}:{i}: {line.strip()}")
     assert not hits, "direct persist/cache in package code:\n" + "\n".join(hits)
+
+
+def test_settings_table_names_every_env_variable():
+    """README's Settings table lists exactly the ``SPARK_GRAFT_*``
+    variables that the package, ``bench.py`` and ``__spark_entry__.py``
+    mention, so a new knob cannot land without a row."""
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    name = re.compile(r"SPARK_GRAFT_[A-Z0-9_]+")
+    paths = [os.path.join(repo, "bench.py"),
+             os.path.join(repo, "__spark_entry__.py")]
+    for root, _dirs, files in os.walk(
+            os.path.join(repo, "enexory_parquet_export_spark")):
+        paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    in_code = set()
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            in_code.update(name.findall(fh.read()))
+    with open(os.path.join(repo, "README.md"), encoding="utf-8") as fh:
+        readme = fh.read()
+    section = readme.split("\n## Settings\n", 1)[1].split("\n## ", 1)[0]
+    in_table = {m for line in section.splitlines() if line.startswith("| `")
+                for m in name.findall(line.split("|")[1])}
+    assert in_code and in_code == in_table

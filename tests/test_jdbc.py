@@ -2,9 +2,8 @@
 
 No JDBC driver jar ships in this container, so the wire read itself
 cannot run here; what IS testable — and what production depends on —
-is the option contract: the 1M fetchsize chunk analog, pushdown flags,
-and the per-day predicate partitioning that parallelizes the
-reference's sequential day loop.
+is the option contract: the 1M fetchsize chunk analog and the pushdown
+flags.
 """
 
 from __future__ import annotations
@@ -12,7 +11,6 @@ from __future__ import annotations
 from enexory_parquet_export_spark.sources.tables import (
     JDBC_FETCH_SIZE,
     SOURCE_COLS,
-    day_window_predicates,
     jdbc_scan_options,
 )
 
@@ -34,18 +32,6 @@ def test_pushdown_flags_on_and_driver_passthrough():
     assert opts["pushDownAggregate"] == "true"
     assert opts["driver"] == "com.mysql.cj.jdbc.Driver"
     assert opts["sessionInitStatement"] == "SET x=1"
-
-
-def test_day_window_predicates_half_open_and_contiguous():
-    preds = day_window_predicates("date_time",
-                                  ["2024-02-28", "2024-02-29", "2024-03-01"])
-    # the reference's exact half-open window (db_extractor.py:225-230)
-    assert preds[0] == ("`date_time` >= '2024-02-28 00:00:00' "
-                        "AND `date_time` < '2024-02-29 00:00:00'")
-    # leap-day and month rollovers chain correctly
-    assert "'2024-03-01 00:00:00'" in preds[1]
-    assert "'2024-03-02 00:00:00'" in preds[2]
-    assert len(preds) == 3
 
 
 def test_source_projection_is_reference_column_list():

@@ -1,6 +1,5 @@
-"""quota_select: exact vs sampled-threshold mixture selection (x106
-scale path — VERDICT r7 #4: the docstring's hash-threshold cut must be
-an executable code path with pinned quota accuracy)."""
+"""quota_select: exact per-source mixture selection in hash order
+(x106's selection step)."""
 
 from __future__ import annotations
 
@@ -28,48 +27,18 @@ def _fixture(spark):
 
 def test_exact_mode_counts_and_determinism(spark):
     docs, quota = _fixture(spark)
-    sel = quota_select(docs, quota, mode="exact")
+    sel = quota_select(docs, quota)
     counts = {r["source"]: r["cnt"] for r in
               sel.groupBy("source").agg(F.count("*").alias("cnt")).collect()}
-    # exact mode selects exactly min(quota, n) per source
+    # selects exactly min(quota, n) per source
     assert counts == {"web": 120, "books": 75, "code": 30}
     again = sorted(r["doc_id"] for r in sel.collect())
     assert again == sorted(r["doc_id"] for r in
-                           quota_select(docs, quota, mode="exact").collect())
-
-
-def test_threshold_mode_quota_accuracy_and_subset_coherence(spark):
-    docs, quota = _fixture(spark)
-    exact = {s: set() for s in ("web", "books", "code")}
-    for r in quota_select(docs, quota, mode="exact").collect():
-        exact[r["source"]].add(r["doc_id"])
-    approx = {s: set() for s in ("web", "books", "code")}
-    for r in quota_select(docs, quota, mode="threshold").collect():
-        approx[r["source"]].add(r["doc_id"])
-    for s, want in (("web", 120), ("books", 75), ("code", 30)):
-        got = len(approx[s])
-        # sketch + grid tolerance: within 5% of the target or ±3 docs
-        assert abs(got - want) <= max(3, int(0.05 * want)), (s, got, want)
-        # same hash order ⇒ the smaller selection is (nearly) nested in
-        # the larger: symmetric difference bounded by the count gap +
-        # one grid cell of boundary docs
-        sym = len(exact[s] ^ approx[s])
-        assert sym <= abs(got - want) + max(3, int(0.05 * want)), (s, sym)
-
-
-def test_threshold_mode_zero_quota_selects_nothing(spark):
-    docs, _ = _fixture(spark)
-    quota = spark.createDataFrame(
-        [("web", 600, 0), ("books", 150, 10), ("code", 30, 0)],
-        "source string, n bigint, quota bigint")
-    sel = quota_select(docs, quota, mode="threshold")
-    srcs = {r["source"] for r in sel.select("source").distinct().collect()}
-    assert srcs == {"books"}
+                           quota_select(docs, quota).collect())
 
 
 def test_exact_mode_matches_x106_fixture(spark, sf_dir):
-    """On the real documents fixture the operator's exact mode must
-    reproduce x106's n_selected per source (the declared semantics)."""
+    """On the real documents fixture the operator must reproduce x106's n_selected per source (the declared semantics)."""
     from enexory_parquet_export_spark import queries_ext as qx
 
     out = {r["source"]: r for r in
@@ -80,18 +49,15 @@ def test_exact_mode_matches_x106_fixture(spark, sf_dir):
         [(s, int(out[s]["n_docs"]), int(out[s]["quota"])) for s in out],
         "source string, n bigint, quota bigint")
     counts = {r["source"]: r["cnt"] for r in
-              quota_select(docs, quota, mode="exact")
+              quota_select(docs, quota)
               .groupBy("source").agg(F.count("*").alias("cnt")).collect()}
     for s in out:
         assert counts.get(s, 0) == out[s]["n_selected"], s
 
 
 # ---------------------------------------------------------------------------
-# Property-based: on ANY corpus and ANY quota vector, exact mode
-# selects exactly min(quota, n) docs per source in deterministic hash
-# order, and threshold mode stays within its documented tolerance of
-# the same target while selecting only from the same hash order
-# (selected-set coherence).
+# Property-based: on ANY corpus and ANY quota vector, quota_select
+# selects exactly min(quota, n) docs per source.
 # ---------------------------------------------------------------------------
 from hypothesis import given, settings, strategies as st  # noqa: E402
 
@@ -115,19 +81,7 @@ def test_quota_select_property(spark, sources):
     quota = spark.createDataFrame(quota_rows,
                                   "source string, n bigint, quota bigint")
     exact = {}
-    for r in quota_select(docs, quota, mode="exact").collect():
+    for r in quota_select(docs, quota).collect():
         exact.setdefault(r["source"], set()).add(r["doc_id"])
     for name, n, q in quota_rows:
         assert len(exact.get(name, set())) == min(q, n), (name, n, q)
-    approx = {}
-    for r in quota_select(docs, quota, mode="threshold").collect():
-        approx.setdefault(r["source"], set()).add(r["doc_id"])
-    for name, n, q in quota_rows:
-        want = min(q, n)
-        got = len(approx.get(name, set()))
-        if q == 0:
-            assert got == 0, name
-            continue
-        # tiny relations: the sketch is exact up to one grid cell
-        assert abs(got - want) <= max(3, int(0.05 * want) + 1), (
-            name, got, want)

@@ -50,51 +50,6 @@ def test_bpe_merges_match_reference(spark, word_counts):
     assert got == _bpe_reference(dict(word_counts), _BPE_ITERS)
 
 
-# 5 derandomized examples: each example runs FOUR full Spark BPE
-# trainings (68 s at 10 examples was the suite's slowest test; the
-# deep-merge pin test below covers the long-horizon behavior) —
-# r13 VERDICT item 3 (suite wall must fit the driver budget)
-@settings(max_examples=5, deadline=None, derandomize=True)
-@given(_corpus)
-def test_bpe_local_mode_matches_spark_and_reference(spark, word_counts):
-    """The r6 hybrid (mode="local": Spark word-count agg + driver-side
-    incremental Sennrich loop) must be value-identical to the declared
-    spark mode at the gate's iteration count AND to the pure reference
-    at a deeper count the declarative form never runs at."""
-    wc = spark.createDataFrame(list(word_counts.items()),
-                               "word string, cnt bigint")
-    local = [(r["left_sym"], r["right_sym"], r["pair_count"]) for r in
-             bpe_merges(wc, mode="local").sort("step").collect()]
-    sparkm = [(r["left_sym"], r["right_sym"], r["pair_count"])
-              for r in bpe_merges(wc).collect()]
-    assert local == sparkm
-    deep = [(r["left_sym"], r["right_sym"], r["pair_count"]) for r in
-            bpe_merges(wc, mode="local", iters=12).sort("step").collect()]
-    assert deep == _bpe_reference(dict(word_counts), 12)
-    # symbol relation parity: same (word, syms-in-order) both modes
-    def _syms(df):
-        out: dict = {}
-        for r in df.collect():
-            out.setdefault(r["word"], []).append((r["p"], r["s"]))
-        return {w: [s for _, s in sorted(v)] for w, v in out.items()}
-    assert (_syms(bpe_merges(wc, mode="local", return_symbols=True))
-            == _syms(bpe_merges(wc, return_symbols=True)))
-
-
-def test_bpe_local_mode_deep_merges_pinned():
-    """Realistic-depth pin: 60 merges over a multi-word corpus, the
-    incremental-stats loop vs the naive-recount reference."""
-    import random
-    rng = random.Random(6)
-    words = {}
-    for _ in range(300):
-        w = "".join(rng.choice("abcde") for _ in range(rng.randint(1, 9)))
-        words[w] = words.get(w, 0) + rng.randint(1, 20)
-    merges, _ = qx._bpe_local_merges(dict(words), 60)
-    assert merges == _bpe_reference(dict(words), 60)
-    assert len(merges) == 60
-
-
 @settings(max_examples=10, deadline=None, derandomize=True)
 @given(_corpus)
 def test_bpe_vocab_matches_reference(spark, word_counts):
@@ -112,37 +67,30 @@ def test_bpe_vocab_matches_reference(spark, word_counts):
 def test_bpe_artifact_cache_value_identity(spark):
     """The session-scoped artifact cache (cache_key=...) must be
     value-invisible: cached merge table and symbol relation equal the
-    uncached build in BOTH modes, and repeat calls are served from the
-    cache (same persisted object / no new artifact entries)."""
+    uncached build, and repeat calls are served from the cache (same
+    persisted object / no new artifact entries)."""
     words = {"low": 5, "lower": 2, "newest": 6, "widest": 3, "a": 9}
     wc = spark.createDataFrame(list(words.items()),
                                "word string, cnt bigint")
     qx._BPE_ARTIFACTS.clear()
     try:
-        for mode in ("spark", "local"):
-            key = f"test-bpe-cache-{mode}"
-            plain = [tuple(r) for r in
-                     bpe_merges(wc, mode=mode).sort("step").collect()]
-            cached = [tuple(r) for r in
-                      bpe_merges(wc, mode=mode, cache_key=key)
-                      .sort("step").collect()]
-            assert cached == plain
-            n_art = len(qx._BPE_ARTIFACTS)
-            again = [tuple(r) for r in
-                     bpe_merges(wc, mode=mode, cache_key=key)
-                     .sort("step").collect()]
-            assert again == plain
-            assert len(qx._BPE_ARTIFACTS) == n_art  # pure hit, no rebuild
-            sym_plain = {(r["word"], r["cnt"], r["p"], r["s"]) for r in
-                         bpe_merges(wc, mode=mode,
-                                    return_symbols=True).collect()}
-            s1 = bpe_merges(wc, mode=mode, return_symbols=True,
-                            cache_key=key)
-            s2 = bpe_merges(wc, mode=mode, return_symbols=True,
-                            cache_key=key)
-            assert s2 is s1           # persisted artifact object reused
-            assert {(r["word"], r["cnt"], r["p"], r["s"])
-                    for r in s1.collect()} == sym_plain
+        key = "test-bpe-cache"
+        plain = [tuple(r) for r in bpe_merges(wc).sort("step").collect()]
+        cached = [tuple(r) for r in
+                  bpe_merges(wc, cache_key=key).sort("step").collect()]
+        assert cached == plain
+        n_art = len(qx._BPE_ARTIFACTS)
+        again = [tuple(r) for r in
+                 bpe_merges(wc, cache_key=key).sort("step").collect()]
+        assert again == plain
+        assert len(qx._BPE_ARTIFACTS) == n_art  # pure hit, no rebuild
+        sym_plain = {(r["word"], r["cnt"], r["p"], r["s"]) for r in
+                     bpe_merges(wc, return_symbols=True).collect()}
+        s1 = bpe_merges(wc, return_symbols=True, cache_key=key)
+        s2 = bpe_merges(wc, return_symbols=True, cache_key=key)
+        assert s2 is s1           # persisted artifact object reused
+        assert {(r["word"], r["cnt"], r["p"], r["s"])
+                for r in s1.collect()} == sym_plain
     finally:
         for v in qx._BPE_ARTIFACTS.values():
             if hasattr(v, "unpersist"):

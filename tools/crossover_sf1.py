@@ -13,7 +13,15 @@ The scaled table derives deterministically from the sf0.1 fixture
 key cardinality grows 10×) and is cached under ``.scratch/`` (git-
 ignored).  Usage::
 
-    python tools/crossover_sf1.py [--copies N]
+    python tools/crossover_sf1.py [--copies N] [--only SHAPE,...]
+        [--doc-copies N] [--vec-copies N] [--duck-timeout SEC]
+        [--ivf-cached] [--ivf-probe-suite [--n-probes N]]
+        [--ivf-skip-plain] [--comp-nodes N]
+
+``--only`` names the shapes to run: the ``QUERIES``, ``DOC_QUERIES``
+and ``ORD_QUERIES`` keys, ``lsh_rerank``, ``ivf_probe``,
+``components``, ``kmeans``, ``bpe``, ``novelty``, ``semdedup`` and
+``pq_adc``; without it every shape runs.
 """
 
 from __future__ import annotations
@@ -771,37 +779,6 @@ def main() -> int:
                    " CAST(1 AS BIGINT) AS cnt FROM events_sf1),\nsym0 AS"
                    + tail)
         _duck_race("bpe", bpe_sql, ts)
-
-    if only is None or "bpe-local" in only:
-        # r6 hybrid-mode crossover: realistic merge counts.  The
-        # declarative 3-round x95 form pays one sequentially-dependent
-        # global-argmax job wave PER MERGE — measured per-round cost is
-        # extrapolated from 3 vs 9 rounds; at >=1k merges it cannot
-        # finish in any reasonable wall.  mode="local" keeps the
-        # corpus-sized word-count agg in Spark and runs the merge loop
-        # driver-side over the Zipf-bounded vocab (incremental
-        # Sennrich, pinned value-equal in tests/test_ml_property.py).
-        bpe_iters = 1000
-        if "--bpe-iters" in sys.argv:
-            bpe_iters = int(sys.argv[sys.argv.index("--bpe-iters") + 1])
-        words = spark.sql(
-            "SELECT CAST(event_id AS STRING) AS word,"
-            " CAST(1 AS BIGINT) AS cnt FROM events_sf1")
-        nw = words.count()
-        print(f"bpe-local vocab words: {nw:,}", flush=True)
-        t3 = _timed(lambda: bpe_merges(words, iters=3).write
-                    .format("noop").mode("overwrite").save())
-        t9 = _timed(lambda: bpe_merges(words, iters=9).write
-                    .format("noop").mode("overwrite").save())
-        per_round = (t9 - t3) / 6.0
-        proj = t3 + per_round * (bpe_iters - 3)
-        tl = _timed(lambda: bpe_merges(words, mode="local",
-                                       iters=bpe_iters).write
-                    .format("noop").mode("overwrite").save())
-        print(f"| bpe-local {bpe_iters} merges | declarative proj "
-              f"{proj:.0f}s ({per_round:.2f}s/round from 3/9-round A/B "
-              f"{t3:.1f}/{t9:.1f}s) | hybrid {tl:.2f} | "
-              f"{proj / tl:.0f}× |", flush=True)
 
     if only is None or "novelty" in only:
         # x93 at scale runs the DECLARED pair verbatim: the engine
