@@ -35,7 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 def _source(spark: SparkSession, args) -> DataFrame:
     if args.source_parquet:
-        return spark.read.parquet(args.source_parquet)
+        from .sources.writer import footer_schema
+        return (spark.read.schema(footer_schema(spark, args.source_parquet))
+                .parquet(args.source_parquet))
     from .sources.tables import read_source_jdbc
     return read_source_jdbc(spark, args.jdbc_url, args.jdbc_table)
 

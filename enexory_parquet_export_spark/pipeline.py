@@ -163,9 +163,11 @@ def row_integrity(spark: SparkSession, source: DataFrame,
     differences that cancel out in the totals still fail the audit.
     The source is scanned in full.  The mirror is read with a declared
     schema of its partition column alone, ``day string``: no job infers
-    the data schema, and parquet counts the rows from the file footers
-    (as row_integrity.py:68 does).  So a mirror directory with no data
-    files audits as zero rows."""
+    the data schema, its day directories are listed on the driver
+    however many there are, and parquet counts the rows from the file
+    footers (as row_integrity.py:68 does).  So the audit's only jobs
+    are its aggregation, and a mirror directory with no data files
+    audits as zero rows."""
     mirror = spark.read.schema("day string").parquet(mirror_path)
     sides = (normalize(source).select("day", F.lit(True).alias("src"))
              .unionByName(mirror.select("day", F.lit(False).alias("src"))))

@@ -71,6 +71,14 @@ RUNTIME_CONFS: dict[str, str] = {
     # disk-split × codec-ratio ≲ per-core memory budget).
     "spark.sql.files.maxPartitionBytes":
         os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"),
+    # List directories on the driver.  Past this many paths (default
+    # 32) Spark lists them in a Spark job of its own, and a whole-mirror
+    # read has one path per day; an explicit list of the day paths is
+    # listed in a job just the same.  Listing a whole mirror, that job
+    # against the driver (median of 5, 4 cores, local disk): 64 days
+    # 588 → 37 ms, 400 days 1.59 → 0.053 s, 2,000 days 7.06 → 0.18 s.
+    # 100,000 days is 270 years: no mirror reaches it.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "100000",
     # per-day idempotent overwrite == the reference's whole-partition
     # rewrite primitive (Parquet Export/db_extractor.py:247-248)
     "spark.sql.sources.partitionOverwriteMode": "dynamic",

@@ -17,7 +17,10 @@ metric of the write itself), so callers never re-read to learn them;
 ``list_days`` answers "which days exist" from the directory names on
 the driver; ``read_day_partitioned(…, days=…)`` opens only the day
 directories a caller needs, so a read of a few days does not list the
-whole mirror.
+whole mirror.  No read here runs a discovery job: directories are
+listed on the driver, and ``footer_schema`` reads the schema from one
+file's footer on the driver instead of Spark's inference job (the
+reference, too, reads its day files by name with a fixed schema).
 
 Scale posture: dynamic partition overwrite only rewrites touched
 partitions, so a 100 TB mirror with a 3-day CDC window rewrites 3
@@ -27,8 +30,11 @@ metadata operation on the partition *list*, never a data scan.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def write_day_partitioned(df: DataFrame, path: str) -> list[str]:
@@ -98,23 +104,67 @@ def read_day_partitioned(spark: SparkSession, path: str, *,
     """Read the mirror back; ``day`` comes from the directory layout,
     so day-filters become partition pruning (no data scan).
 
-    ``days=None`` reads the whole mirror, and Spark lists every day
-    directory to find its files: past 32 of them
-    (``spark.sql.sources.parallelPartitionDiscovery.threshold``) that
-    listing is a Spark job of its own.  ``days`` reads only those
+    ``days=None`` reads the whole mirror; ``days`` reads only those
     ``day=D`` directories (one ``load`` of their paths, ``basePath``
-    keeping ``day`` a column), listed on the driver while there are at
-    most 32.  The schema is still inferred from the files, and ``day``
-    is cast back to the string it is everywhere else (inferred, it is
-    a ``date``).
+    keeping ``day`` a column).  Either way the directories are listed
+    on the driver (``session.RUNTIME_CONFS`` pins the parallel-listing
+    threshold above any mirror's day count), and the schema is declared:
+    one data file's footer, read on the driver by :func:`footer_schema`,
+    plus ``day string``.  So the read submits no Spark job of its own;
+    the declared schema is the files' own, so a ``select`` of a column
+    the mirror lacks still fails analysis.
     """
-    reader = spark.read.format("parquet")
+    schema = footer_schema(spark, f"{path}/day={days[0]}" if days else path)
+    reader = spark.read.format("parquet").schema(schema.add("day", "string"))
     if days is None:
-        df = reader.load(path)
+        return reader.load(path)
+    return (reader.option("basePath", path)
+            .load([f"{path}/day={d}" for d in days]))
+
+
+def _first_data_file(fs, status):
+    """The first file under ``status`` in listing order, skipping the
+    ``_``/``.`` names Spark skips (``_SUCCESS``, ``.crc`` files,
+    temporary directories), or ``None``."""
+    if status.isFile():
+        return status.getPath()
+    for child in fs.listStatus(status.getPath()):
+        if not child.getPath().getName().startswith(("_", ".")):
+            found = _first_data_file(fs, child)
+            if found is not None:
+                return found
+    return None
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The data schema of the parquet files under ``path`` (a file, a
+    directory or a glob), read on the driver from the footer of its
+    first data file.
+
+    This is what Spark's schema inference does without ``mergeSchema``
+    (it, too, reads one file and assumes the rest agree), minus the
+    Spark job it runs for that: the footer is read with parquet-mr and
+    converted by Spark's own ``ParquetFileFormat.readSchemaFromFooter``
+    under the session's SQL conf, so ``nanosAsLong`` and the other read
+    settings apply.  Partition columns are not included.
+    """
+    fs, jvm, jpath = _hadoop_fs(spark, path)
+    for root in fs.globStatus(jpath) or []:
+        found = _first_data_file(fs, root)
+        if found is not None:
+            break
     else:
-        df = (reader.option("basePath", path)
-              .load([f"{path}/day={d}" for d in days]))
-    return df.withColumn("day", F.col("day").cast("string"))
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    parquet = jvm.org.apache.parquet
+    footer = parquet.hadoop.ParquetFileReader.readFooter(
+        spark.sparkContext._jsc.hadoopConfiguration(), found,
+        parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    datasources = jvm.org.apache.spark.sql.execution.datasources
+    schema = datasources.parquet.ParquetFileFormat.readSchemaFromFooter(
+        parquet.hadoop.Footer(found, footer),
+        datasources.parquet.ParquetToSparkSchemaConverter(
+            spark._jsparkSession.sessionState().conf()))
+    return StructType.fromJson(json.loads(schema.json()))
 
 
 def day_files(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:

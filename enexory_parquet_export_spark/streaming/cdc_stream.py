@@ -75,16 +75,17 @@ def merge_batch(spark: SparkSession, batch: DataFrame, mirror_path: str) -> list
     directories only, fold the batch into it
     (delete→update-if-exists→upsert, :func:`..operators.cdc.merge_changelog`),
     rewrite the days the merge produced, then drop the touched days it
-    left empty.  Its Spark jobs: the touched-day collect, the base
-    read's schema inference, then the merge — one shuffle, by ``day``,
-    which the write reuses — and its write.  Returns the touched days,
-    sorted: every day the merge rewrote or removed.
+    left empty.  Its Spark jobs: the touched-day collect, then the
+    merge — one shuffle, by ``day``, which the write reuses — and its
+    write.  The base read submits none: it lists its days and reads its
+    schema from one file's footer on the driver.  Returns the touched
+    days, sorted: every day the merge rewrote or removed.
 
-    The base read infers its schema from the mirror's files, so a
-    mirror in another schema (``sync`` writes ``id``/``ts``) fails the
-    ``select`` below before anything is written.  When no touched day
-    exists yet, one existing day is opened for that check alone: the
-    ``day`` filter prunes all of its files."""
+    The base read declares the mirror files' own schema, so a mirror in
+    another schema (``sync`` writes ``id``/``ts``) fails the ``select``
+    below before anything is written.  When no touched day exists yet,
+    one existing day is opened for that check alone: the ``day`` filter
+    prunes all of its files."""
     touched = sorted(r["day"] for r in batch.select("day").distinct().collect())
     if not touched:
         return []

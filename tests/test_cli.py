@@ -45,6 +45,33 @@ def test_cli_sync_and_integrity(spark, sf_dir, tmp_path, capsys):
     assert rc == 0 and rep["matches"] is True
 
 
+def test_cli_sync_job_ceiling_above_listing_threshold(spark, tmp_path, capsys,
+                                                     count_jobs):
+    """``sync --source-parquet`` that adds one night to a 40-day mirror
+    takes 4 jobs: the write (2), then the audit's aggregation (2).  The
+    source's schema is read from one file's footer on the driver and
+    the audit lists the mirror's days there, so neither a schema
+    inference nor a listing job runs."""
+    src_path, mirror = str(tmp_path / "src"), str(tmp_path / "m")
+    argv = ["sync", "--source-parquet", src_path, "--mirror", mirror]
+
+    def write_source(n_days):
+        days = [f"2010-{1 + d // 28:02d}-{1 + d % 28:02d}" for d in range(n_days)]
+        spark.createDataFrame(
+            [(i, f"{day} 01:00:00", float(i), f"{day} 02:00:00")
+             for i, day in enumerate(days)],
+            "id bigint, date_time string, value double, ts string") \
+            .write.mode("overwrite").parquet(src_path)
+
+    write_source(40)
+    assert main(argv) == 0
+    write_source(41)
+    jobs, rc = count_jobs(main, argv)
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0 and rep["matches"] is True and rep["mirror_rows"] == 41
+    assert len(jobs) <= 4, jobs
+
+
 def test_cli_integrity_fails_on_day_mismatches_that_cancel_out(spark, tmp_path,
                                                               capsys):
     """Equal totals do not make a match: the mirror holds days A=1 and

@@ -150,6 +150,56 @@ def test_day_partitioned_write_returns_days_written(spark, tmp_path):
     assert sorted(map(tuple, read_day_partitioned(spark, path).collect())) == before
 
 
+def test_footer_schema_equals_inferred_schema(spark, tmp_path, count_jobs):
+    """The schema read on the driver from one file's footer is the one
+    Spark's inference job finds, partition columns aside, and reading
+    it submits no Spark job: on a multi-file flat directory, a mirror
+    and one of its day directories, a TIMESTAMP(NANOS) file and a file
+    whose column is all NULL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from enexory_parquet_export_spark.sources.writer import (
+        footer_schema,
+        write_day_partitioned,
+    )
+
+    rows = spark.createDataFrame(
+        [(i, f"2024-01-{1 + i % 3:02d}", f"2024-01-0{1 + i % 3} 00:00:00",
+          float(i), None) for i in range(30)],
+        "id bigint, day string, date_time string, value double, empty double")
+    flat, mirror = str(tmp_path / "flat"), str(tmp_path / "mirror")
+    rows.drop("day").repartition(3).write.parquet(flat)
+    write_day_partitioned(rows, mirror)
+    nanos, nulls = str(tmp_path / "nanos.parquet"), str(tmp_path / "nulls.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1, 2], pa.timestamp("ns")),
+                             "id": pa.array([1, 2], pa.int64())}),
+                   nanos, version="2.6")
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int64()),
+                             "n": pa.nulls(2)}), nulls)
+    for path in (flat, f"{mirror}/day=2024-01-02", mirror, nanos, nulls):
+        jobs, got = count_jobs(footer_schema, spark, path)
+        inferred = spark.read.parquet(path).schema
+        assert got == StructType([f for f in inferred if f.name != "day"]), path
+        assert jobs == [], path
+
+
+def test_footer_schema_of_path_without_data_file_names_it(spark, tmp_path):
+    """A directory holding only Spark's ``_SUCCESS`` marker, or no
+    path at all, has no footer to read: the error names the path."""
+    import re
+
+    from enexory_parquet_export_spark.sources.writer import footer_schema
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    for path in (str(empty), str(tmp_path / "missing")):
+        with pytest.raises(FileNotFoundError, match=re.escape(path)):
+            footer_schema(spark, path)
+
+
 def test_day_partition_pruning_scans_only_filtered_day(spark, tmp_path):
     """A day-filter on the mirror must prune at the FILE level: the
     scan's inputFiles() may only touch the selected day's directory —

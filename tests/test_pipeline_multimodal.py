@@ -30,6 +30,15 @@ ROWS_V1 = [
 ]
 
 
+def _forty_days():
+    """``ROWS_V1``'s 4 days (the sentinel day among them) plus one row
+    on each of 36 more days: a 40-day mirror."""
+    return ROWS_V1 + [(10 + d, f"2010-02-{d:02d} 01:00:00", 1.0,
+                       f"2010-02-{d:02d} 02:00:00") for d in range(1, 29)] \
+        + [(40 + d, f"2010-03-{d:02d} 01:00:00", 1.0,
+            f"2010-03-{d:02d} 02:00:00") for d in range(1, 9)]
+
+
 class TestPipeline:
     def test_backfill_then_incremental(self, spark, tmp_path):
         mirror = str(tmp_path / "mirror")
@@ -223,21 +232,34 @@ class TestPipeline:
 
     def test_run_sync_job_ceiling_above_listing_threshold(
             self, spark, tmp_path, count_jobs):
-        """On a 40-day mirror a whole-mirror read lists its day
-        directories in a Spark job of its own.  The budget grows by that
-        one job to 5, paid by the audit, which must see every day; the
-        resume point still takes none, and the audit infers no schema."""
+        """On a 40-day mirror, past Spark's default threshold of 32
+        paths for listing in a job of its own, the budget stays 4: the
+        write, then the audit's aggregation.  The audit must see every
+        day, and its listing runs on the driver (the session pins the
+        threshold high); the resume point takes no job either, and the
+        audit infers no schema."""
         mirror = str(tmp_path / "m8")
-        rows = ROWS_V1 + [(10 + d, f"2010-02-{d:02d} 01:00:00", 1.0,
-                           f"2010-02-{d:02d} 02:00:00") for d in range(1, 29)] \
-            + [(40 + d, f"2010-03-{d:02d} 01:00:00", 1.0,
-                f"2010-03-{d:02d} 02:00:00") for d in range(1, 9)]
-        P.run_sync(spark, src(spark, rows), mirror)
+        P.run_sync(spark, src(spark, _forty_days()), mirror)
         assert len(list_days(spark, mirror)) == 40
-        rows.append((99, "2010-03-09 01:00:00", 5.0, "2010-03-09 02:00:00"))
+        rows = _forty_days() + [(99, "2010-03-09 01:00:00", 5.0,
+                                 "2010-03-09 02:00:00")]
         jobs, rep = count_jobs(P.run_sync, spark, src(spark, rows), mirror)
         assert rep.matches and not rep.per_day_mismatches, rep
-        assert len(jobs) <= 5, jobs
+        assert len(jobs) <= 4, jobs
+
+    def test_repair_job_ceiling_above_listing_threshold(
+            self, spark, tmp_path, count_jobs):
+        """``repair`` of a clean 40-day mirror is its aggregation alone,
+        2 jobs: the whole-mirror read lists its days on the driver and
+        takes its schema from one file's footer there.  A listing job or
+        a schema-inference job adds one each."""
+        mirror = str(tmp_path / "m12")
+        P.run_sync(spark, src(spark, _forty_days()), mirror)
+        assert len(list_days(spark, mirror)) == 40
+        jobs, fixed = count_jobs(P.repair, spark, mirror)
+        assert fixed == 0
+        assert len(jobs) <= 2, jobs
+
 
 class TestMultimodal:
     def test_extract_features_deterministic(self, spark, sf_dir):
